@@ -1,0 +1,1 @@
+"""gmall chain benchmark (see README.md); entry point: run.py."""
