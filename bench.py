@@ -322,7 +322,7 @@ def run_serving_tier() -> int:
     # figures to isolated subprocesses in r11). The orchestrator invokes
     # this tier once per scope; "both" remains for manual runs.
     scope = os.environ.get("SPARK_GRAFT_SERVING_SCOPE", "both")
-    # hibatch (the 48/64-micro-batch auto-compaction evidence) runs at
+    # hibatch (the 48/64-micro-batch auto-fold evidence) runs at
     # the default sf only: the claim it supports — read latency flat vs
     # batch count — is about directory LAYOUT, not data size, and that
     # many micro-batches at sf1 would add minutes of pure foreachBatch
@@ -502,13 +502,14 @@ def _serving_measure(spark, sf_dir: str, hibatch: bool = False) -> dict:
             spark, spost, "doc_id", _SERVING_QUERY, k=10, as_of_batch=2).count())
 
     if hibatch:
-        # Auto-compaction evidence (round-11 lead task): the same index
-        # maintained over 48 micro-batches — the tiered policy folds the
-        # tail twice (batches 0-15, 16-31), so reads span 2 chunks + a
-        # 16-dir tail instead of 48 batch dirs. The claim under test:
-        # read latency stays FLAT vs batch count (compare with the
-        # 4-batch post_stream_* entries above), including the as-of path
-        # whose horizon (batch 2) now lives inside a folded chunk.
+        # Auto-fold evidence (round-11 lead task): the same index
+        # maintained over 48 micro-batches — the postings store keeps at
+        # most compact_every + keep_recent = 20 runs per bucket, folding
+        # from the 21st commit on, so reads span <= 20 runs per bucket
+        # instead of 48. The claim under test: read latency stays FLAT vs
+        # batch count (compare with the 4-batch post_stream_* entries
+        # above), including the as-of path whose horizon (batch 2) now
+        # lives inside a folded run.
         spost48 = scratch_dir("serv_spost48")
         if isolated:
             build["postings_stream_upkeep_48b"] = isolated_build(
@@ -968,7 +969,7 @@ def main() -> int:
         "sf": sf,
         # the core count the tiers ran at (round 15, VERDICT r14 #2: the
         # driver's low-core comparison needs it in the record itself)
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()),
         # orchestrator-level ambient fingerprint at record time; each
         # tier fragment carries its own start/end stamps
         "load": _load_stamp(),

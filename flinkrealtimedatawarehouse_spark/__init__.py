@@ -19,14 +19,16 @@ Layout (see SURVEY.md for the operator inventory this covers):
                      MERGE upsert + SCD2 history + changelog diff (K3),
                      data-quality expectations, gap filling, HLL sketches,
                      skew salting, table layout (partition/Z-order/
-                     compaction).
+                     small-file ``compact_dir``).
 - ``functions``    — F1 tokenizer (built-in split + CJK-bigram fallback).
 - ``streaming``    — Structured Streaming forms: sources/sinks (S1/S6,
                      K1-K5), watermarked aggregations and joins (T1-T3),
                      stateful dedup/bounce (T5/T7), session windows,
                      foreachBatch routing + upsert (K2/K3), streaming
                      near-dup band state, checkpointing (T9), RocksDB
-                     state store option.
+                     state store option; every growing sink state and
+                     the streamed search indexes live in one versioned
+                     store (``streaming.partstore``).
 - ``datapipeline`` — large-scale training-data ops: dedup (exact/MinHash/
                      SimHash/Jaccard/embedding/line-level), ANN similarity
                      (brute-force/LSH/IVF/PQ, persisted index, k-means,

@@ -14,7 +14,26 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+
+# Share of MemAvailable the pre-touched driver heap may take when
+# SPARK_DRIVER_MEMORY is unset: the rest is headroom for the Python
+# workers (Arrow buffers, pandas UDFs) and the JVM's off-heap memory.
+# Measured on a 4-core / 15 GiB box: 0.4 gives a 6 GiB heap, on which
+# the default test suite passes; 16g (the old fixed default) could not
+# start the JVM there at all.
+HEAP_SHARE = 0.4
+MAX_HEAP_MB = 16 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap when SPARK_DRIVER_MEMORY is unset: ``HEAP_SHARE`` of
+    MemAvailable, at least 1 GiB and at most 16 GiB."""
+    with open(meminfo) as f:
+        avail_kb = next(int(line.split()[1]) for line in f
+                        if line.startswith("MemAvailable:"))
+    mb = int(avail_kb / 1024 * HEAP_SHARE)
+    return f"{min(max(mb, 1024), MAX_HEAP_MB)}m"
 
 
 def get_spark(
@@ -29,7 +48,7 @@ def get_spark(
     handling), broadcast threshold generous for star-schema dims, Arrow on
     for the pandas-UDF slow path.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     # Fixed, fully pre-touched heap (round 14, guide §1 "measure first"):
     # on this sandbox's kernel the JVM's default grow-and-shrink heap
@@ -45,8 +64,9 @@ def get_spark(
     # the kernel: the same cold run drops 214 s -> 4 s and steady-state
     # sys time drops to ~2 s. Same discipline as production executors
     # (fixed-size pre-touched heaps are the standard large-heap setup);
-    # SPARK_DRIVER_MEMORY stays the size knob — -Xms tracks it.
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    # SPARK_DRIVER_MEMORY stays the size knob — -Xms tracks it — and
+    # without it the heap is sized from the machine's free memory.
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     jvm_opts = f"-Xms{driver_mem} -XX:+AlwaysPreTouch " + os.environ.get(
         "SPARK_GRAFT_JVM_OPTS", ""
     )
@@ -63,6 +83,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_mem)
         .config("spark.driver.extraJavaOptions", jvm_opts.strip())
+        # the partitioned stores hand the reader an explicit list of run
+        # directories from their manifest; above this threshold (default
+        # 32 paths) Spark lists them with a distributed job, pure overhead
+        # for already-enumerated leaves (measured on the 48-batch serving
+        # indexes: +0.3-1.2 s per read at 40-160 paths)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
     )
     if not SparkSession.getActiveSession():
         builder = builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))

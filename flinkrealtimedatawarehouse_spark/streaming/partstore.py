@@ -40,11 +40,14 @@ merge — through ``merge_fn``, so a folded run shrinks to distinct keys —
 into one folded run, in ONE Spark job across all folding partitions
 (keys never cross partitions, so a global merge + re-route equals
 per-partition merges). Size-tiered smallest-first keeps run sizes
-geometric: each row is rewritten O(log B) times over a B-batch stream —
-the same argument as ``compaction.TieredAppendStore``, now applied to
-snapshot state. A fold REWRITES the current version's manifest in place
-(equivalent content, atomic replace) so ``version`` keeps tracking
-applied batches 1:1 — the invariant every as-of consumer relies on.
+geometric: each row is rewritten O(log B) times over a B-batch stream,
+the standard tiering argument. Append-only stores (the streamed postings
+and IVF corpus indexes) pass ``append_only``: nothing collapses, so a
+fold is a pure rewrite of ``max_runs`` runs into one, and ``max_runs``
+bounds every partition's read fan-out. A fold REWRITES the current
+version's manifest in place (equivalent content, atomic replace) so
+``version`` keeps tracking applied batches 1:1 — the invariant every
+as-of consumer relies on.
 
 Crash contract (single marker-write point preserved — the crash suite's
 ``_commit`` injection exercises this store unchanged):
@@ -158,6 +161,13 @@ def latest_wins(key_cols: list[str], val_cols: list[str]):
 
     f.evolves = False  # value-column list is pinned: no schema evolution
     return f
+
+
+def append_only(df: DataFrame) -> DataFrame:
+    """Merge-on-read fold for append-only stores: no collapse, every
+    committed row stays a row (the streamed postings and IVF corpus,
+    whose rows carry their own ``batch`` column for as-of filtering)."""
+    return df
 
 
 class PartitionedSnapshotStore(VersionedSnapshotSink):
@@ -505,6 +515,22 @@ class PartitionedSnapshotStore(VersionedSnapshotSink):
         v = self.version if version is None else version
         return self._read(spark, v, pids=set(int(p) for p in pids),
                           merged=merged)
+
+    def folded_through(self) -> int:
+        """Version of the newest fold the current manifest references
+        (-1: none yet). Changes exactly when a commit folds."""
+        if self.version < 0:
+            return -1
+        return max(
+            (int(r["n"][1:])
+             for runs in self._load_manifest(self.version)["parts"].values()
+             for r in runs if r["n"].startswith("f")),
+            default=-1,
+        )
+
+    def file_count(self, spark: SparkSession) -> int:
+        """Parquet files a current-state read scans."""
+        return len(self.current(spark).inputFiles())
 
     def pids_of(self, keys_df: DataFrame) -> list[int]:
         """The partitions a key set routes to. BOUNDED COLLECT — at most

@@ -13,10 +13,13 @@ fold (gate- and test-asserted).
 Incremental design — what makes this cheap per batch:
 
 - **Postings are append-only.** A new document only ADDS (term, doc,
-  tf, dl) rows; existing rows never change. Each micro-batch writes its
-  own ``postings/batch=<id>/bucket=<hash>/`` parquet partition —
-  replay-safe because a re-delivered batch overwrites its own directory
-  with identical bytes, and nothing else.
+  tf, dl) rows; existing rows never change. The postings live in a
+  ``partstore.PartitionedSnapshotStore`` keyed on ``term`` with
+  ``n_partitions = n_buckets``, so the store's own routing
+  ``pmod(xxhash64(term), n)`` is the search bucket (pid == bucket), and
+  an ``append_only`` merge: each micro-batch commits one run per touched
+  bucket with ``batch`` stamped as a data column, and a redelivered
+  batch is a no-op through the store's ``seen(batch_id)``.
 - **df is NOT stored.** ``build_postings`` denormalizes df onto every
   posting row, which is the right call for a write-once index but would
   turn incremental upkeep into a rewrite of every matching row per
@@ -35,29 +38,23 @@ Incremental design — what makes this cheap per batch:
 
 Scale: per batch the work is tokenize + one partial agg + one
 partitioned parquet write of |batch| rows — no read-modify-write of the
-existing index, no vocabulary-sized merge. The index directory would
-grow one partition per batch forever; since round 11 the sink runs the
-``compaction.TieredAppendStore`` policy BY DEFAULT (an LSM tree on raw
-parquet: the tail of recent ``batch=`` dirs stays bounded, older
-batches fold into bucket-partitioned chunks with ``batch`` as a sorted
-data column, chunks merge size-tiered). The policy encodes the round-10
-measurement: at 32 batches x 64 buckets the batch-partitioned layout
-cost ~4.5 s/query in 1,922-leaf directory listing, the bucket-only
-layout ~1 s/query with the as-of ROW filter beating directory pruning
-4x — at high batch counts the metadata cost IS the read cost, so the
-compacted layout demotes ``batch`` to data and keeps as-of correct via
-chunk-range pruning + row-group min/max. Both manual layouts remain
-answer-identical and test-pinned (tests/test_datapipeline.py::
-test_streamed_postings_compaction_preserves_search); automatic
-compaction is pinned across >= 64 batches in
-tests/test_streaming.py::test_auto_compaction_bounds_postings_layout.
+existing index, no vocabulary-sized merge. The store's size-tiered fold
+keeps the runs per bucket at most ``max_runs = compact_every +
+keep_recent``, and ``keep_recent`` manifest versions are retained as
+the grace window for reads planned before a fold. A search reads only
+its terms' buckets from the current manifest (no directory listing) and
+an as-of search keeps the rows with ``batch <= as_of_batch``, so every
+horizon stays answerable however the runs were folded. The store's
+marker pins ``n_partitions``: reopening an index with a different
+``n_buckets`` raises instead of bucketing postings under two moduli.
 
-Crash contract (same as the other sinks): postings land BEFORE the
-stats marker, so a crash between the two replays the batch on restart —
-the postings overwrite is a no-op and the stats fold applies once. A
-search against an index whose stream died mid-batch and never restarted
-may see that batch's postings without its stats; restart-to-recover
-completes the fold (pinned in tests/test_crash_recovery.py).
+Crash contract: the postings commit lands BEFORE the stats commit and
+each is replay-guarded by its own marker, so a crash between the two
+replays the batch on restart — the postings commit is skipped and the
+stats fold applies once. A search against an index whose stream died
+mid-batch and never restarted may see that batch's postings without
+its stats; restart-to-recover completes the fold (pinned in
+tests/test_crash_recovery.py).
 """
 
 from __future__ import annotations
@@ -76,7 +73,10 @@ from flinkrealtimedatawarehouse_spark.datapipeline.textstats import (
     _term_buckets,
     query_terms,
 )
-from flinkrealtimedatawarehouse_spark.streaming.compaction import TieredAppendStore
+from flinkrealtimedatawarehouse_spark.streaming.partstore import (
+    PartitionedSnapshotStore,
+    append_only,
+)
 from flinkrealtimedatawarehouse_spark.streaming.sinks import AdditiveGoldSink
 
 _STATS_KEYS = ["all_docs"]
@@ -90,74 +90,51 @@ def _stats_sink(out_dir: str, read_only: bool = False) -> AdditiveGoldSink:
     )
 
 
-def _postings_store(out_dir: str, fence_check=None, **policy) -> TieredAppendStore:
-    # sort chunks by term first (every query filters terms: dictionary +
-    # min/max prune within the bucket), batch second (as-of row filter)
-    return TieredAppendStore(
-        os.path.join(out_dir, "postings"), "bucket",
-        sort_cols=["term", "batch"], fence_check=fence_check, **policy,
+def _postings_store(out_dir: str, n_buckets: int, compact_every: int = 16,
+                    keep_recent: int = 4,
+                    read_only: bool = False) -> PartitionedSnapshotStore:
+    return PartitionedSnapshotStore(
+        os.path.join(out_dir, "postings"), ["term"], append_only,
+        n_partitions=n_buckets, max_runs=compact_every + keep_recent,
+        read_only=read_only, retain_versions=keep_recent,
     )
+
+
+def _postings_reader(out_dir: str) -> PartitionedSnapshotStore:
+    """Read handle on the postings store, at the bucket count its
+    marker pins (a search does not know the writer's ``n_buckets``)."""
+    store_dir = os.path.join(out_dir, "postings")
+    with open(os.path.join(store_dir, "_committed.json")) as f:
+        n_buckets = json.load(f)["meta"]["n_partitions"]
+    return _postings_store(out_dir, n_buckets, read_only=True)
 
 
 class PostingsIndexSink:
     """foreachBatch writer that maintains the streamed inverted index:
-    per batch, (1) tokenize + tf-aggregate, (2) overwrite the batch's own
-    bucket-partitioned postings directory, (3) fold (n_docs, sum_dl)
-    through the replay-safe AdditiveGoldSink, (4) run the tiered
-    compaction policy (``compaction`` module; pass
-    ``compact_every=None`` to disable). Postings-before-marker ordering
-    makes the pair recoverable (module docstring); compaction folds only
-    stats-committed batches and is gated against replays by
-    ``folded_through``."""
+    per batch, (1) tokenize + tf-aggregate, (2) commit the postings as
+    one run per touched bucket to the partitioned store (which folds
+    runs past ``compact_every + keep_recent`` per bucket), (3) fold
+    (n_docs, sum_dl) through the replay-safe AdditiveGoldSink.
+    Postings-before-stats ordering makes the pair recoverable (module
+    docstring)."""
 
     def __init__(self, out_dir: str, id_col: str, text_col: str,
                  n_buckets: int = POSTINGS_BUCKETS,
-                 compact_every: int | None = 16, keep_recent: int = 4,
-                 max_chunks: int = 8):
+                 compact_every: int = 16, keep_recent: int = 4):
         self.out_dir = out_dir
         self.id_col, self.text_col = id_col, text_col
         self.n_buckets = n_buckets
         self.stats = _stats_sink(out_dir)
-        self.compact_every = compact_every
-        self.store = _postings_store(
-            out_dir, fence_check=self.stats._check_fence,
-            compact_every=compact_every or 16, keep_recent=keep_recent,
-            max_chunks=max_chunks,
-        )
-        # layout marker: the bucket modulus is part of the on-disk index
-        # (a mismatched search-time modulus silently prunes REAL postings
-        # — same rule as build_postings' stats row). Write-once, before
-        # any batch, so even a crash after batch 0 leaves it readable; a
-        # restarted writer passing a DIFFERENT modulus must refuse rather
-        # than mix moduli in one directory (the silent corruption the
-        # marker exists to prevent).
-        meta = os.path.join(out_dir, "layout.json")
-        if os.path.exists(meta):
-            with open(meta) as f:
-                stored = json.load(f)["n_buckets"]
-            if stored != n_buckets:
-                raise ValueError(
-                    f"index at {out_dir} was built with n_buckets={stored}; "
-                    f"refusing to append with n_buckets={n_buckets} (postings "
-                    "bucketed under two moduli would be silently pruned away "
-                    "at search time)"
-                )
-        else:
-            os.makedirs(out_dir, exist_ok=True)
-            with open(meta, "w") as f:
-                json.dump({"n_buckets": n_buckets}, f)
+        self.store = _postings_store(out_dir, n_buckets, compact_every,
+                                     keep_recent)
 
     def write_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.store.folded_through():
-            # redelivered batch whose rows already live in a compacted
-            # chunk: recreating its tail directory would double-count the
-            # rows (chunk + tail), and its stats fold was committed before
-            # the batch became foldable — the whole redelivery is a no-op
+        if self.stats.seen(batch_id):  # both halves applied: no-op
             return
         toks = batch.select(
             F.col(self.id_col), spark_tokens(F.col(self.text_col)).alias("toks")
         ).filter(F.size("toks") > 0)
-        # two actions read this lineage (postings write + stats fold);
+        # two actions read this lineage (postings commit + stats fold);
         # without the batch-scoped persist every document would be
         # regex-tokenized twice per micro-batch.
         # NEGATIVE RESULT (round 15, kept per the repo's discipline): a
@@ -173,31 +150,24 @@ class PostingsIndexSink:
         # implementation.
         toks.persist()
         try:
-            tf = (
-                toks.select(
-                    F.col(self.id_col), F.size("toks").alias("dl"),
-                    F.explode("toks").alias("term"),
+            if not self.store.seen(batch_id):  # else: crashed before stats
+                tf = (
+                    toks.select(
+                        F.col(self.id_col), F.size("toks").alias("dl"),
+                        F.explode("toks").alias("term"),
+                    )
+                    .groupBy(self.id_col, "dl", "term")
+                    .agg(F.count(F.lit(1)).alias("tf"))
+                    .withColumn("batch", F.lit(batch_id).cast("long"))
                 )
-                .groupBy(self.id_col, "dl", "term")
-                .agg(F.count(F.lit(1)).alias("tf"))
-                .withColumn(
-                    "bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(self.n_buckets)).cast("int"),
-                )
-            )
-            # idempotent under replay: the batch owns this directory
-            tf.write.mode("overwrite").partitionBy("bucket").parquet(
-                os.path.join(self.out_dir, "postings", f"batch={batch_id}")
-            )
+                self.store.snapshot_init(tf.limit(0))  # no-op once committed
+                self.store.commit_batch(tf, batch_id)
             self.stats.write_batch(
                 toks.select(F.lit(0).alias("all_docs"), F.size("toks").alias("dl")),
                 batch_id,
             )
         finally:
             toks.unpersist()
-        if self.compact_every is not None:
-            # after the stats marker: only committed batches ever fold
-            self.store.maybe_compact(batch.sparkSession, self.stats.last_bid)
 
 
 def stage_postings_input(docs: DataFrame, id_col: str, text_col: str,
@@ -240,8 +210,8 @@ def streamed_postings_search(spark: SparkSession, out_dir: str, id_col: str,
                              k: int = 10,
                              as_of_batch: int | None = None) -> DataFrame:
     """Search the stream-maintained index: bucket-pruned, term-filtered
-    postings scan (reads 1/n_buckets of the index per term — the batch
-    partitions under each bucket are pruned directories too), per-term
+    postings scan (reads only the runs of the query terms' buckets,
+    1/n_buckets of the index per term), per-term
     window count = corpus df, corpus scalars from the additive stats
     snapshot, then the shared ``_bm25_rank`` tail — one definition of
     the formula across bm25_search / postings_search / this.
@@ -249,17 +219,15 @@ def streamed_postings_search(spark: SparkSession, out_dir: str, id_col: str,
     ``as_of_batch`` = point-in-time search: answer as the index stood
     after that stream batch committed — stats from the matching snapshot
     version (one commit per applied batch, ids sequential from 0, so
-    version == batch id) and postings pruned to ``batch <= as_of_batch``
-    directories. Versions the stats sink has vacuumed raise, per
-    ``read_version``'s own contract."""
+    version == batch id) and postings filtered to ``batch <= as_of_batch``.
+    Versions the stats sink has vacuumed raise, per ``read_version``'s
+    own contract."""
     terms = query_terms(query)
     if not terms:
         raise ValueError("query has no tokens")
     rows, stats = _streamed_index_rows(spark, out_dir, terms, as_of_batch)
     term_w = Window.partitionBy("term")
-    postings = rows.withColumn("df", F.count(F.lit(1)).over(term_w)).drop(
-        "batch", "bucket"
-    )
+    postings = rows.withColumn("df", F.count(F.lit(1)).over(term_w)).drop("batch")
     return _bm25_rank(postings, stats, id_col, k1, b, k)
 
 
@@ -267,12 +235,8 @@ def _streamed_index_rows(spark: SparkSession, out_dir: str, terms: list[str],
                          as_of_batch: int | None):
     """Shared read path for single- and multi-query streamed search:
     (pruned+filtered postings rows, stats frame). df is NOT stored in the
-    streamed layout — callers window-count it over these rows. Reads go
-    through the tiered store: chunk + tail union once auto-compaction has
-    run, a plain directory read (identical to the pre-compaction plan)
-    before it."""
-    with open(os.path.join(out_dir, "layout.json")) as f:
-        n_buckets = json.load(f)["n_buckets"]
+    streamed layout — callers window-count it over these rows. The rows
+    are the query buckets' runs in the current manifest."""
     sink = _stats_sink(out_dir, read_only=True)
     if as_of_batch is None:
         cur = sink.current(spark)
@@ -283,15 +247,11 @@ def _streamed_index_rows(spark: SparkSession, out_dir: str, terms: list[str],
     stats = cur.select(
         F.col("n_docs"), (F.col("sum_dl") / F.col("n_docs")).alias("avgdl")
     )
-    buckets = sorted(set(_term_buckets(spark, terms, n_buckets).values()))
-    # part_vals: the scan is constructed from the term buckets' own
-    # directories (round 15, guide §6) instead of listing the whole
-    # batch= / bucket= tree and pruning after — identical rows, the
-    # per-read listing premium removed
-    rows = (
-        _postings_store(out_dir).read(spark, as_of_batch, part_vals=buckets)
-        .filter(F.col("term").isin(terms))
-    )
+    store = _postings_reader(out_dir)
+    buckets = set(_term_buckets(spark, terms, store.n_partitions).values())
+    rows = store.read_parts(spark, buckets).filter(F.col("term").isin(terms))
+    if as_of_batch is not None:
+        rows = rows.filter(F.col("batch") <= as_of_batch)
     return rows, stats
 
 
@@ -315,7 +275,5 @@ def streamed_postings_search_many(spark: SparkSession, out_dir: str,
     qdf = spark.createDataFrame(qrows, "query_id long, term string")
     rows, stats = _streamed_index_rows(spark, out_dir, all_terms, as_of_batch)
     term_w = Window.partitionBy("term")
-    postings = rows.withColumn("df", F.count(F.lit(1)).over(term_w)).drop(
-        "batch", "bucket"
-    )
+    postings = rows.withColumn("df", F.count(F.lit(1)).over(term_w)).drop("batch")
     return _bm25_rank_many(postings, qdf, stats, id_col, k1, b, k)

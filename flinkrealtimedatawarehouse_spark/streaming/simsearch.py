@@ -86,11 +86,11 @@ class IncrementalTopKSink(VersionedSnapshotSink):
 # sink reproduces the batch sum bit-for-bit under any stream split.
 #
 # What's appended vs folded:
-# - corpus rows (neighbor_id, cell, qn): append-only — each batch writes
-#   its own corpus/batch=<id>/cell=<k>/ partition, replay-safe by
-#   overwriting only its own directory. Search prunes by cell exactly as
-#   against the batch-built layout (the extra batch partition column
-#   rides along and prunes nothing away).
+# - corpus rows (neighbor_id, cell, qn, batch): append-only — a
+#   partstore.PartitionedSnapshotStore keyed on cell with an append_only
+#   merge; each batch commits one run per touched partition, a redelivery
+#   is a no-op through the store's seen(batch_id). Search reads only the
+#   probed cells' partitions from the current manifest.
 # - per-(cell, pos) component sums: AdditiveGoldSink (replay-safe
 #   batch-id marker); centroids are assembled at read time by the same
 #   collect_list/array_sort shape _cell_centroids uses. Values are
@@ -104,28 +104,33 @@ class IncrementalTopKSink(VersionedSnapshotSink):
 # with the data because the sums fold continuously.
 
 
+# corpus store partitions: cells hash into these, so a search reads its
+# probed cells' partitions (plus any other cells sharing them, beyond 64)
+IVF_PARTITIONS = 64
+
+
 class IvfIndexSink:
     """foreachBatch writer maintaining the persisted IVF index
     incrementally. ``streamed_ivf_topk`` answers searches from it,
     identically to ``ivf_topk`` over the full corpus (gate- and
-    parity-tested). Corpus partitions run the same tiered compaction
-    policy as the postings index (``compaction`` module, on by default;
-    ``compact_every=None`` disables): recent batches stay as directories,
-    older ones fold into cell-partitioned chunks with ``batch`` demoted
-    to a sorted data column, size-tiered major merges bound chunk count."""
+    parity-tested). The corpus lives in the same kind of partitioned
+    store as the postings index: runs per partition stay at most
+    ``compact_every + keep_recent`` through the store's size-tiered
+    fold, and ``keep_recent`` manifest versions are the reader grace
+    window."""
 
     def __init__(self, out_dir: str, id_col: str, vec_col: str,
                  label_col: str, quant: int | None = None,
                  meta_cols: list[str] | None = None,
                  read_only: bool = False,
-                 compact_every: int | None = 16, keep_recent: int = 4,
-                 max_chunks: int = 8):
+                 compact_every: int = 16, keep_recent: int = 4):
         import json
         import os
 
         from flinkrealtimedatawarehouse_spark.datapipeline import similarity
-        from flinkrealtimedatawarehouse_spark.streaming.compaction import (
-            TieredAppendStore,
+        from flinkrealtimedatawarehouse_spark.streaming.partstore import (
+            PartitionedSnapshotStore,
+            append_only,
         )
         from flinkrealtimedatawarehouse_spark.streaming.sinks import AdditiveGoldSink
 
@@ -140,19 +145,15 @@ class IvfIndexSink:
             os.path.join(out_dir, "centsums"), keys=["cell", "pos"],
             measures={"s": ("qv", "sum")}, read_only=read_only,
         )
-        self.compact_every = compact_every
-        # as-of reads filter batch, then cell-pruned scans re-rank: sort
-        # chunk rows by batch so its row-group envelopes stay tight
-        self.store = TieredAppendStore(
-            os.path.join(out_dir, "corpus"), "cell", sort_cols=["batch"],
-            fence_check=None if read_only else self.cent._check_fence,
-            compact_every=compact_every or 16, keep_recent=keep_recent,
-            max_chunks=max_chunks,
+        self.store = PartitionedSnapshotStore(
+            os.path.join(out_dir, "corpus"), ["cell"], append_only,
+            n_partitions=IVF_PARTITIONS, max_runs=compact_every + keep_recent,
+            read_only=read_only, retain_versions=keep_recent,
         )
-        # layout marker (same rule as the postings index): quant and
-        # meta_cols are part of the on-disk layout — a handle with a
-        # different quant would quantize probes on a different grid than
-        # the stored corpus/centroid sums, silently shifting near-tie
+        # layout marker (the store's own marker pins the partitioning):
+        # quant and meta_cols are part of the on-disk layout — a handle
+        # with a different quant would quantize probes on a different grid
+        # than the stored corpus/centroid sums, silently shifting near-tie
         # rankings instead of erroring. Write-once by the writer;
         # validated by every handle, read handles adopt nothing blindly.
         meta = os.path.join(out_dir, "layout.json")
@@ -184,30 +185,24 @@ class IvfIndexSink:
         )
 
     def write_batch(self, batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        if batch_id <= self.store.folded_through():
-            # redelivery of a batch already folded into a chunk: writing
-            # its corpus directory back would double the rows, and its
-            # centroid fold committed before it became foldable — no-op
+        if self.cent.seen(batch_id):  # both halves applied: no-op
             return
         corpus = self._corpus_rows(batch)
-        # two actions read this lineage (corpus write + centroid fold);
+        # two actions read this lineage (corpus commit + centroid fold);
         # batch-scoped persist so every vector is quantized once, not twice
         corpus.persist()
         try:
-            # corpus lands before the centroid marker (crash between the
-            # two replays the batch: directory overwrite is a no-op, fold
-            # applies once — same ordering contract as PostingsIndexSink)
-            corpus.write.mode("overwrite").partitionBy("cell").parquet(
-                os.path.join(self.out_dir, "corpus", f"batch={batch_id}")
-            )
+            # corpus commits before the centroid marker (crash between the
+            # two replays the batch: the store skips its seen batch, the
+            # fold applies once — same ordering contract as PostingsIndexSink)
+            if not self.store.seen(batch_id):
+                rows = corpus.withColumn("batch", F.lit(batch_id).cast("long"))
+                self.store.snapshot_init(rows.limit(0))  # no-op once committed
+                self.store.commit_batch(rows, batch_id)
             pos = corpus.select("cell", F.posexplode(F.col("qn")).alias("pos", "qv"))
             self.cent.write_batch(pos, batch_id)
         finally:
             corpus.unpersist()
-        if self.compact_every is not None:
-            self.store.maybe_compact(batch.sparkSession, self.cent.last_bid)
 
     def centroids(self, spark: SparkSession,
                   as_of_batch: int | None = None) -> DataFrame:
@@ -275,7 +270,7 @@ def streamed_ivf_topk(spark: SparkSession, sink: IvfIndexSink,
                       as_of_batch: int | None = None) -> DataFrame:
     """Search the stream-maintained IVF index: rank cells per probe
     against the folded centroids, then scan ONLY the probed cells'
-    partition directories for the exact re-rank — the same plan shape
+    store partitions for the exact re-rank — the same plan shape
     (and the same shared helpers) as ``ivf_index_topk`` on a batch-built
     index, including ``corpus_filter`` (an optional Column predicate
     over the index's corpus columns — filtered vector search: partition
@@ -296,15 +291,17 @@ def streamed_ivf_topk(spark: SparkSession, sink: IvfIndexSink,
     probe_cells = _rank_probe_cells(
         probe_q, sink.centroids(spark, as_of_batch), n_probe
     )
-    cells = [r.probe_cell
-             for r in probe_cells.select("probe_cell").distinct().collect()]
-    # tiered read: chunk + tail union after auto-compaction, a plain
-    # directory read before it; as-of (ids sequential from 0 == snapshot
-    # version) prunes chunks by range and filters the batch column.
-    # part_vals constructs the scan from the probed cells' own partition
-    # directories (round 15, guide §6) — identical rows to the old
-    # read().filter(isin), without listing every unprobed cell dir
-    corpus = sink.store.read(spark, as_of_batch, part_vals=cells)
+    # as-of: ids sequential from 0 == snapshot version, so the batch
+    # column filter keeps exactly the vectors committed by then
+    probed = (
+        probe_cells.select(F.col("probe_cell").alias("cell")).distinct()
+        .select("cell", sink.store.pid_expr().alias("pid")).collect()
+    )
+    corpus = sink.store.read_parts(spark, {r.pid for r in probed}).filter(
+        F.col("cell").isin([r.cell for r in probed])
+    )
+    if as_of_batch is not None:
+        corpus = corpus.filter(F.col("batch") <= as_of_batch)
     if corpus_filter is not None:
         corpus = corpus.filter(corpus_filter)
     return _cell_rerank(corpus, probe_cells, k)

@@ -580,184 +580,120 @@ def test_chain_restart_mid_batch_state_recovers(spark, tmp_path):
         assert got == clean, f"chain diverged after crash at batch {crash_at}"
 
 
-@pytest.mark.slow
-def test_compaction_crash_between_marker_and_cleanup(spark, tmp_path):
-    """Tiered compaction's write-then-commit contract: if the process
-    dies AFTER the compaction marker commits but BEFORE the folded tail
-    directories are deleted, the read path must already ignore the
-    orphans (their rows live in the chunk; counting both would double
-    every posting) and the next policy run must sweep them."""
-    import shutil as _shutil
-
-    from flinkrealtimedatawarehouse_spark.datapipeline import textstats
+def _postings_sink(idx, **policy):
     from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
         PostingsIndexSink,
-        streamed_postings_search,
     )
 
-    rows = [(i, "alpha beta" if i % 2 else "gamma zeta") for i in range(24)]
-    idx = str(tmp_path / "ccomp")
-    sink = PostingsIndexSink(
-        idx, "doc_id", "text", n_buckets=4,
-        compact_every=4, keep_recent=2, max_chunks=3,
-    )
-    # crash simulation: capture every folded tail dir and RESTORE it
-    # after the fold (marker committed, cleanup "never happened")
-    real_rmtree = _shutil.rmtree
-    stashed: dict[str, str] = {}
+    return PostingsIndexSink(idx, "doc_id", "text", n_buckets=4, **policy)
 
-    def _stash_rmtree(path, *a, **kw):
-        if "/postings/batch=" in str(path) and os.path.isdir(path):
-            dst = str(tmp_path / f"stash_{len(stashed)}")
-            _shutil.copytree(path, dst)
-            stashed[str(path)] = dst
-        return real_rmtree(path, *a, **kw)
 
-    docs = lambda lo, hi: spark.createDataFrame(  # noqa: E731
-        rows[lo:hi], "doc_id long, text string")
-    for bid in range(6):  # tail hits 6 = compact_every + keep_recent
-        if bid == 5:
-            _shutil.rmtree = _stash_rmtree
-        try:
-            sink.write_batch(docs(bid * 4, bid * 4 + 4), bid)
-        finally:
-            _shutil.rmtree = real_rmtree
-    st = sink.store._load()
-    assert st["folded_through"] == 3 and stashed  # fold ran, dirs captured
-    for orig, dst in stashed.items():  # resurrect the "undeleted" dirs
-        _shutil.copytree(dst, orig)
+_FOLD_ROWS = [(i, "alpha beta" if i % 2 else "gamma zeta") for i in range(24)]
 
-    # read path ignores the orphans: equals the batch engine, no doubling
-    expect = textstats.bm25_search(
-        docs(0, 24), "doc_id", "text", "alpha zeta", k=20).collect()
-    got = streamed_postings_search(
-        spark, idx, "doc_id", "alpha zeta", k=20).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in expect]
 
-    # next policy run sweeps them (no new fold needed to trigger GC)
-    sink.store.maybe_compact(spark, sink.stats.last_bid)
-    left = sink.store._tail_batch_ids()
-    assert all(b > st["folded_through"] for b in left), left
+def _fold_docs(spark, bid):
+    return _docs(spark, _FOLD_ROWS[bid * 4:bid * 4 + 4])
 
 
 @pytest.mark.slow
-def test_compaction_crash_before_marker_is_invisible(spark, tmp_path):
-    """The other half of write-then-commit: a chunk directory written by
-    a fold that died BEFORE its marker commit must be invisible to reads
-    and harmlessly overwritten by the next successful fold (next_id was
-    never advanced)."""
+def test_postings_crash_between_store_and_stats_commit_replays_once(spark, tmp_path):
+    """The postings sink commits the postings store, then the stats
+    marker. A crash between the two — here in a batch whose store commit
+    also folded — must replay exactly once: the restarted sink skips the
+    seen store commit and applies the stats fold, so current and as-of
+    answers equal the batch engine, and redelivering any batch is a
+    no-op on both stores."""
     from flinkrealtimedatawarehouse_spark.datapipeline import textstats
     from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
-        PostingsIndexSink,
         streamed_postings_search,
     )
 
-    rows = [(i, "alpha beta gamma"[: 5 + (i % 3) * 5]) for i in range(20)]
-    idx = str(tmp_path / "ccomp2")
-    sink = PostingsIndexSink(
-        idx, "doc_id", "text", n_buckets=4,
-        compact_every=4, keep_recent=2, max_chunks=3,
-    )
-    docs = lambda lo, hi: spark.createDataFrame(  # noqa: E731
-        rows[lo:hi], "doc_id long, text string")
-    for bid in range(5):  # one short of the fold trigger
-        sink.write_batch(docs(bid * 4, bid * 4 + 4), bid)
+    idx = str(tmp_path / "cpost")
+    policy = dict(compact_every=1, keep_recent=1)  # max_runs=2: folds from batch 2
+    sink = _postings_sink(idx, **policy)
+    for bid in range(6):
+        if bid == 3:
+            before = sink.store.folded_through()
+            _arm_marker_crash(sink.stats)
+            with pytest.raises(_CrashInjected):
+                sink.write_batch(_fold_docs(spark, bid), bid)
+            assert sink.store.last_bid == bid  # postings committed ...
+            assert sink.store.folded_through() != before  # ... and folded
+            sink = _postings_sink(idx, **policy)  # restart; bid redelivers
+        sink.write_batch(_fold_docs(spark, bid), bid)
 
-    # simulate the doomed fold: chunk data written, marker never commits
-    st0 = sink.store._load()
-    doomed = sink.store.tail_dir + "_chunks/c000000"
-    spark.read.parquet(sink.store.tail_dir).filter(
-        F.col("batch") <= 1
-    ).write.mode("overwrite").partitionBy("bucket").parquet(doomed)
-    assert sink.store._load() == st0  # marker untouched
+    versions = (sink.store.version, sink.stats.version)
+    for bid in range(6):  # at-least-once redelivery of every batch
+        sink.write_batch(_fold_docs(spark, bid), bid)
+    assert (sink.store.version, sink.stats.version) == versions
 
-    expect = textstats.bm25_search(
-        docs(0, 20), "doc_id", "text", "alpha beta", k=20).collect()
-    got = streamed_postings_search(
-        spark, idx, "doc_id", "alpha beta", k=20).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in expect]
-
-    # the 6th batch triggers the real fold, which reclaims the name
-    sink.write_batch(docs(16, 20).limit(0).unionByName(docs(0, 0)).unionByName(
-        spark.createDataFrame([(100, "alpha zeta")], "doc_id long, text string")
-    ), 5)
-    st = sink.store._load()
-    assert st["folded_through"] == 3
-    assert [c["name"] for c in st["chunks"]] == ["c000000"]
-    got2 = streamed_postings_search(
-        spark, idx, "doc_id", "alpha beta", k=25).collect()
-    expect2 = textstats.bm25_search(
-        docs(0, 20).unionByName(spark.createDataFrame(
-            [(100, "alpha zeta")], "doc_id long, text string")),
-        "doc_id", "text", "alpha beta", k=25).collect()
-    assert [tuple(r) for r in got2] == [tuple(r) for r in expect2]
+    q = "alpha zeta"
+    for b in (None, 0, 2, 3, 5):
+        hi = 6 if b is None else b + 1
+        expect = textstats.bm25_search(
+            _docs(spark, _FOLD_ROWS[:hi * 4]), "doc_id", "text", q, k=20).collect()
+        got = streamed_postings_search(
+            spark, idx, "doc_id", q, k=20, as_of_batch=b).collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in expect], b
 
 
-def test_compaction_read_raced_by_concurrent_fold_retries_clean(spark, tmp_path):
-    """The documented reader hazard (compaction.py "Reader hazard"): a
-    query PLANNED over tail directories that a concurrent minor fold
-    deletes mid-read fails at execution and must succeed on retry with
-    exactly the pinned answer. The race is driven deterministically:
-    Spark lists parquet files when the DataFrame is created, so holding a
-    pre-fold plan across ``maybe_compact`` (via the 6th write_batch that
-    trips the policy) IS the planned-then-deleted interleaving."""
-    from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
-        PostingsIndexSink,
-    )
+def test_fenced_postings_writer_cannot_commit_fold_or_vacuum(spark, tmp_path):
+    """A superseded postings writer must not change a byte of the index:
+    its commit, a fold it would run and a vacuum all re-check the store's
+    writer fence and raise first."""
+    idx = str(tmp_path / "fpost")
+    sink = _postings_sink(idx, compact_every=2, keep_recent=2)  # max_runs=4
+    for bid in range(3):
+        sink.write_batch(_fold_docs(spark, bid), bid)
+    _postings_sink(idx)  # a new writer claims the dir -> the old sink is fenced
 
-    rows = [(i, "alpha beta" if i % 2 else "gamma zeta") for i in range(24)]
-    idx = str(tmp_path / "rrace")
-    sink = PostingsIndexSink(
-        idx, "doc_id", "text", n_buckets=4,
-        compact_every=4, keep_recent=2, max_chunks=3,
-    )
-    docs = lambda lo, hi: spark.createDataFrame(  # noqa: E731
-        rows[lo:hi], "doc_id long, text string")
-    for bid in range(5):  # one short of the fold trigger
-        sink.write_batch(docs(bid * 4, bid * 4 + 4), bid)
+    def state():
+        out = {}
+        for root, _dirs, files in os.walk(idx):
+            for name in files:
+                if name != "_writer.json":
+                    path = os.path.join(root, name)
+                    with open(path, "rb") as f:
+                        out[path] = f.read()
+        return out
+
+    st0 = state()
+    with pytest.raises(RuntimeError, match="fenced|claimed"):
+        sink.write_batch(_fold_docs(spark, 3), 3)
+    sink.store.max_runs = 2  # three runs per bucket: a fold is now due
+    with pytest.raises(RuntimeError, match="fenced|claimed"):
+        sink.store._maybe_fold(spark)
+    with pytest.raises(RuntimeError, match="fenced|claimed"):
+        sink.store.vacuum(keep_last=1)
+    assert state() == st0
+
+
+def test_read_planned_before_fold_and_vacuum_survives_grace_window(spark, tmp_path):
+    """The store's reader hazard: a fold replaces runs and vacuum deletes
+    runs no retained manifest references. A read planned before a fold
+    plus vacuum still returns the same rows while the manifest it was
+    planned from is inside the ``keep_recent`` grace window, and fails
+    (it does not undercount) once the window has passed."""
+    idx = str(tmp_path / "rpost")
+    sink = _postings_sink(idx, compact_every=1, keep_recent=2)  # max_runs=3
+    for bid in range(3):
+        sink.write_batch(_fold_docs(spark, bid), bid)
 
     def canon(df):
         cols = sorted(df.columns)
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
-    pinned = canon(sink.store.read(spark))
-    stale = sink.store.read(spark)  # plan NOW: file listing captures the
-    # 5 tail dirs that the fold below is about to delete
-    sink.write_batch(docs(20, 24), 5)  # 6th batch -> minor fold fires
-    st = sink.store._load()
-    assert st["folded_through"] == 3 and st["chunks"]  # batches 0-3 folded
+    pinned = canon(sink.store.current(spark))
+    stale = sink.store.current(spark)  # planned now: lists the 3 delta runs
+    before = sink.store.folded_through()
+    sink.write_batch(_fold_docs(spark, 3), 3)  # 4th run -> fold, then vacuum
+    assert sink.store.folded_through() != before and sink.store.min_version > 0
+    assert canon(stale) == pinned
+    new_rows = canon(sink.store.current(spark).filter(F.col("batch") == 3))
+    assert new_rows and canon(sink.store.current(spark)) == sorted(pinned + new_rows)
+    sink.write_batch(_fold_docs(spark, 4), 4)  # the planned manifest ages out
     with pytest.raises(Exception, match="(?i)file|path|exist"):
-        stale.count()  # the raced read fails, it does not undercount
-    # the retry re-plans from the marker (chunks + surviving tail) and
-    # returns the pinned rows plus exactly the new batch
-    fresh = sink.store.read(spark)
-    new_rows = canon(sink.store.read(spark).filter(F.col("batch") == 5))
-    assert canon(fresh) == sorted(pinned + new_rows)
-
-
-def test_compaction_respects_writer_fence(spark, tmp_path):
-    """A fenced (superseded) postings writer must not compact: the
-    marker commit re-checks the owning stats sink's fence and raises
-    before touching the compaction marker or deleting data."""
-    from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
-        PostingsIndexSink,
-    )
-
-    idx = str(tmp_path / "fcomp")
-    sink = PostingsIndexSink(
-        idx, "doc_id", "text", n_buckets=4,
-        compact_every=2, keep_recent=1, max_chunks=3,
-    )
-    docs = lambda i: spark.createDataFrame(  # noqa: E731
-        [(i, "alpha beta gamma")], "doc_id long, text string")
-    for bid in range(2):
-        sink.write_batch(docs(bid), bid)
-    # a new writer claims the dir -> the old sink is fenced
-    PostingsIndexSink(idx, "doc_id", "text", n_buckets=4)
-    st0 = sink.store._load()
-    with pytest.raises(RuntimeError, match="fenced|claimed"):
-        sink.write_batch(docs(2), 2)  # stats fold raises on the fence
-    assert sink.store._load() == st0  # compaction state untouched
+        stale.count()
 
 
 def _run_clusters(spark, base_dir, crash_batch=None):

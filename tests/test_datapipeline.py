@@ -1404,8 +1404,8 @@ def test_streamed_postings_index_matches_batch_search(spark, tmp_path):
     """dp25 streaming upkeep: the stream-maintained inverted index answers
     the query EXACTLY like direct bm25_search over the same corpus, for
     any micro-batch split (1 batch == the degenerate batch build; 3
-    batches crosses document boundaries), and the search scan is
-    partition-pruned on the streamed batch=*/bucket=* layout too."""
+    batches crosses document boundaries), and the search scan reads only
+    the query buckets' runs of the streamed store."""
     from flinkrealtimedatawarehouse_spark.streaming import searchindex
 
     import random
@@ -1442,13 +1442,9 @@ def test_streamed_postings_index_matches_batch_search(spark, tmp_path):
     ).collect()
     assert [tuple(r) for r in got_pre] == [tuple(r) for r in direct]
 
-    from flinkrealtimedatawarehouse_spark.operators.layout import scan_report
-    buckets = sorted({textstats._xxhash64_bucket(t, 16) for t in ["alpha", "zeta"]})
-    rep = scan_report(
-        spark, f"{idx}/postings", f"bucket in ({','.join(map(str, buckets))})"
-    )
-    assert rep["plan_has_partition_filters"]
-    assert rep["n_files_scanned"] < rep["n_files_total"]
+    store = searchindex._postings_reader(idx)
+    buckets = {textstats._xxhash64_bucket(t, 16) for t in ["alpha", "zeta"]}
+    assert len(store.read_parts(spark, buckets).inputFiles()) < store.file_count(spark)
 
 
 @pytest.mark.slow
@@ -1622,9 +1618,10 @@ def test_streamed_postings_search_many_matches_per_query(spark, tmp_path):
 def test_index_layout_mismatches_refuse_loudly(spark, tmp_path):
     """Review fixes pinned: (1) a restarted postings writer with a
     different bucket modulus must refuse (mixed moduli silently prune
-    real postings at search time); (2) an IVF handle with a different
-    quant must refuse (probes quantized on a different grid silently
-    shift near-tie rankings); (3) the batched BM25 APIs enforce the
+    real postings at search time) — the postings store's marker pins
+    the partition count once a batch is committed; (2) an IVF handle
+    with a different quant must refuse (probes quantized on a different
+    grid silently shift near-tie rankings); (3) the batched BM25 APIs enforce the
     single-query error contract — token-less queries and duplicate
     query ids raise instead of silently vanishing."""
     import pytest as _pytest
@@ -1633,9 +1630,11 @@ def test_index_layout_mismatches_refuse_loudly(spark, tmp_path):
     from flinkrealtimedatawarehouse_spark.streaming.simsearch import IvfIndexSink
 
     pdir = str(tmp_path / "p")
-    PostingsIndexSink(pdir, "doc_id", "text", n_buckets=16)
-    with _pytest.raises(ValueError, match="n_buckets=16"):
+    PostingsIndexSink(pdir, "doc_id", "text", n_buckets=16).write_batch(
+        _docs(spark, [(1, "alpha beta")]), 0)
+    with _pytest.raises(ValueError, match="n_partitions=16"):
         PostingsIndexSink(pdir, "doc_id", "text", n_buckets=8)
+    PostingsIndexSink(pdir, "doc_id", "text", n_buckets=16)  # same modulus: fine
 
     vdir = str(tmp_path / "v")
     IvfIndexSink(vdir, "vec_id", "embedding", "label")
@@ -1671,100 +1670,45 @@ def test_real_resize_16bit_png_preserves_samples(spark):
 
 
 @pytest.mark.slow
-def test_streamed_postings_compaction_preserves_search(spark, tmp_path):
-    """The documented small-files remedy for streamed indexes: compact the
-    postings with partition_cols=["batch", "bucket"] (BOTH directory
-    levels — dropping batch would demote point-in-time queries from
-    directory pruning to a full-bucket row filter), swap directories, and
-    both current-state AND as-of search answer identically — while the
-    file count actually drops and the as-of scan still prunes batch
-    directories in the executed plan."""
-    import os
-    import shutil
-
-    from flinkrealtimedatawarehouse_spark.operators.layout import compact_dir
-    from flinkrealtimedatawarehouse_spark.streaming import searchindex
+def test_streamed_postings_fold_preserves_search(spark, tmp_path):
+    """The same three micro-batches into an index that never folds and
+    into one whose third commit folds (max_runs=2): current-state AND
+    as-of search answer identically, while the fold actually ran and
+    left fewer files to scan."""
+    from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
+        PostingsIndexSink,
+        streamed_postings_search,
+    )
 
     import random
     random.seed(23)
     vocab = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
     rows = [(i, " ".join(random.choices(vocab, k=10))) for i in range(1, 61)]
-    d = _docs(spark, rows)
-    idx = str(tmp_path / "cidx")
-    searchindex.stream_postings_upkeep(
-        d, "doc_id", "text", idx, n_batches=3, n_buckets=8, tag="cidx"
-    )
     q = "alpha zeta"
-    before = searchindex.streamed_postings_search(spark, idx, "doc_id", q, k=15).collect()
-    before_asof = [
-        searchindex.streamed_postings_search(
-            spark, idx, "doc_id", q, k=15, as_of_batch=b
-        ).collect()
-        for b in range(3)
-    ]
 
-    post = os.path.join(idx, "postings")
-    # model the accumulated-small-files state compaction exists for: at
-    # test scale each micro-batch wrote ONE file per (batch, bucket) leaf,
-    # so fragment the index (several files per leaf — what parallel write
-    # tasks produce on a real stream) before compacting it back down
-    frag = spark.read.parquet(post).repartition(5)
-    frag.write.mode("overwrite").partitionBy("batch", "bucket").parquet(post + "_frag")
-    shutil.move(post, post + "_orig")
-    shutil.move(post + "_frag", post)
-    stats = compact_dir(
-        spark, post, post + "_compact", partition_cols=["batch", "bucket"]
-    )
-    assert stats["files_after"] < stats["files_before"]
-    shutil.move(post, post + "_old")
-    shutil.move(post + "_compact", post)
+    def answers(idx, **policy):
+        sink = PostingsIndexSink(idx, "doc_id", "text", n_buckets=8, **policy)
+        for bid in range(3):
+            sink.write_batch(_docs(spark, rows[bid * 20:(bid + 1) * 20]), bid)
+        got = [
+            [tuple(r) for r in streamed_postings_search(
+                spark, idx, "doc_id", q, k=15, as_of_batch=b).collect()]
+            for b in (None, 0, 1, 2)
+        ]
+        return sink.store, got
 
-    after = searchindex.streamed_postings_search(spark, idx, "doc_id", q, k=15).collect()
-    assert [tuple(r) for r in after] == [tuple(r) for r in before]
-    for b in range(3):
-        got = searchindex.streamed_postings_search(
-            spark, idx, "doc_id", q, k=15, as_of_batch=b
-        )
-        assert [tuple(r) for r in got.collect()] == [tuple(r) for r in before_asof[b]], b
-    # point-in-time pruning SURVIVES compaction: batch stays a directory
-    # partition, so the as-of predicate is a PartitionFilter, not a row scan
-    asof0 = searchindex.streamed_postings_search(
-        spark, idx, "doc_id", q, k=15, as_of_batch=0
-    )
-    plan = asof0._sc._jvm.PythonSQLUtils.explainString(
-        asof0._jdf.queryExecution(), "extended"
-    )
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters", 1)[1][:300]
-    assert "batch" in pf and "bucket" in pf, pf
-
-    # the OTHER documented layout — bucket-only, batch demoted to a data
-    # column (measured 4-5x faster reads at high batch counts,
-    # SCALE.md) — stays CORRECT for both current and as-of queries: the
-    # as-of predicate degrades to a row filter, never to a wrong answer
-    stats2 = compact_dir(spark, post, post + "_c2", partition_cols=["bucket"])
-    assert stats2["files_after"] < stats["files_after"]
-    shutil.move(post, post + "_old2")
-    shutil.move(post + "_c2", post)
-    flat = searchindex.streamed_postings_search(spark, idx, "doc_id", q, k=15).collect()
-    assert [tuple(r) for r in flat] == [tuple(r) for r in before]
-    for b in range(3):
-        got = searchindex.streamed_postings_search(
-            spark, idx, "doc_id", q, k=15, as_of_batch=b
-        )
-        assert [tuple(r) for r in got.collect()] == [tuple(r) for r in before_asof[b]], b
+    flat, before = answers(str(tmp_path / "flat"))
+    folded, after = answers(str(tmp_path / "folded"), compact_every=1, keep_recent=1)
+    assert flat.folded_through() == -1 and folded.folded_through() >= 0
+    assert folded.file_count(spark) < flat.file_count(spark)
+    assert after == before
 
 
 @pytest.mark.slow
-def test_streamed_ivf_compaction_preserves_topk_and_as_of(spark, tmp_path):
-    """IVF twin of the postings compaction contract: compact the corpus
-    with partition_cols=["batch", "cell"], swap, and current-state +
-    point-in-time top-k answer identically with cell/batch directory
-    pruning intact."""
-    import os
-    import shutil
-
-    from flinkrealtimedatawarehouse_spark.operators.layout import compact_dir
+def test_streamed_ivf_fold_preserves_topk_and_as_of(spark, tmp_path):
+    """IVF twin of the postings fold contract: the same three batches into
+    a never-folding and a folding corpus store answer current-state and
+    point-in-time top-k identically."""
     from flinkrealtimedatawarehouse_spark.streaming.simsearch import (
         IvfIndexSink,
         streamed_ivf_topk,
@@ -1777,42 +1721,25 @@ def test_streamed_ivf_compaction_preserves_topk_and_as_of(spark, tmp_path):
         for i in range(1, 25)
     ]
     schema = "vec_id long, embedding array<double>, label int"
-    slices = [rows[:8], rows[8:16], rows[16:]]
-    sink = IvfIndexSink(str(tmp_path / "vidx"), "vec_id", "embedding", "label")
-    for bid, sl in enumerate(slices):
-        sink.write_batch(spark.createDataFrame(sl, schema), bid)
     probes = spark.createDataFrame(rows[:2], schema)
 
-    before = streamed_ivf_topk(spark, sink, probes, k=4, n_probe=2).collect()
-    before_asof = [
-        streamed_ivf_topk(spark, sink, probes, k=4, n_probe=2, as_of_batch=b).collect()
-        for b in range(3)
-    ]
+    def answers(idx, **policy):
+        sink = IvfIndexSink(idx, "vec_id", "embedding", "label", **policy)
+        for bid in range(3):
+            sink.write_batch(
+                spark.createDataFrame(rows[bid * 8:(bid + 1) * 8], schema), bid)
+        got = [
+            [tuple(r) for r in streamed_ivf_topk(
+                spark, sink, probes, k=4, n_probe=2, as_of_batch=b).collect()]
+            for b in (None, 0, 1, 2)
+        ]
+        return sink.store, got
 
-    corp = os.path.join(sink.out_dir, "corpus")
-    stats = compact_dir(
-        spark, corp, corp + "_compact", partition_cols=["batch", "cell"]
-    )
-    assert stats["files_after"] < stats["files_before"]
-    shutil.move(corp, corp + "_old")
-    shutil.move(corp + "_compact", corp)
-
-    after = streamed_ivf_topk(spark, sink, probes, k=4, n_probe=2).collect()
-    assert [tuple(r) for r in after] == [tuple(r) for r in before]
-    for b in range(3):
-        got = streamed_ivf_topk(
-            spark, sink, probes, k=4, n_probe=2, as_of_batch=b
-        ).collect()
-        assert [tuple(r) for r in got] == [tuple(r) for r in before_asof[b]], b
-    # batch + cell both survive compaction as directory partitions: the
-    # as-of corpus scan prunes on BOTH in the executed plan
-    asof0 = streamed_ivf_topk(spark, sink, probes, k=4, n_probe=2, as_of_batch=0)
-    plan = asof0._sc._jvm.PythonSQLUtils.explainString(
-        asof0._jdf.queryExecution(), "extended"
-    )
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters", 1)[1][:300]
-    assert "batch" in pf and "cell" in pf, pf
+    flat, before = answers(str(tmp_path / "flat"))
+    folded, after = answers(str(tmp_path / "folded"), compact_every=1, keep_recent=1)
+    assert flat.folded_through() == -1 and folded.folded_through() >= 0
+    assert folded.file_count(spark) < flat.file_count(spark)
+    assert after == before
 
 
 @pytest.mark.slow
@@ -1860,14 +1787,11 @@ def test_streamed_ivf_index_matches_batch_topk(spark, tmp_path):
         folded_cent = {r.cell: list(r.cvec) for r in sink.centroids(spark).collect()}
         assert folded_cent == batch_cent
 
-    # the search scanned ONLY the probed cells' directories on the
-    # streamed batch=*/cell=* layout (same assertion the batch-built
-    # index and the streamed postings index carry)
-    from flinkrealtimedatawarehouse_spark.operators.layout import scan_report
-
-    rep = scan_report(spark, f"{tmp_path / 'ivfidx3'}/corpus", "cell in (0)")
-    assert rep["plan_has_partition_filters"]
-    assert rep["n_files_scanned"] < rep["n_files_total"]
+    # a probed cell's read scans ONLY its partition's runs of the
+    # streamed store (same assertion the batch-built index and the
+    # streamed postings index carry)
+    pid0 = sink.store.pids_of(spark.createDataFrame([(0,)], "cell int"))
+    assert len(sink.store.read_parts(spark, pid0).inputFiles()) < sink.store.file_count(spark)
 
     # filtered vector search parity: the same corpus predicate against the
     # streamed index and against a batch-built persisted index

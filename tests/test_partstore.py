@@ -520,7 +520,7 @@ def test_fold_crash_before_manifest_rewrite_changes_nothing(spark, tmp_path):
 
 
 def test_read_raced_by_fold_plus_vacuum_retries_clean(spark, tmp_path):
-    """The partstore twin of the compaction reader hazard: a DataFrame
+    """The store's reader hazard: a DataFrame
     planned over run files that a later fold + retention vacuum DELETES
     fails at execution and must succeed on retry with the pinned answer.
     (Without vacuum there is no hazard — folds leave replaced runs on

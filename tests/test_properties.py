@@ -833,3 +833,60 @@ def test_cluster_upkeep_index_superset_and_batch_cc(
         missing = labels.join(sink.pidx.current(spark),
                               ["cluster", "pid"], "left_anti").count()
         assert missing == 0
+
+
+@pytest.fixture(scope="module")
+def folded_postings_store(spark, tmp_path_factory):
+    """A streamed postings store whose retained versions straddle a
+    fold: 6 batches at max_runs=4 (compact_every=1, keep_recent=3), so
+    the commit of batch 4 folds and versions 4..6 stay readable."""
+    import random
+
+    from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
+        PostingsIndexSink,
+    )
+
+    random.seed(43)
+    vocab = ["alpha", "beta", "gamma", "delta", "zeta", "omega"]
+    sink = PostingsIndexSink(str(tmp_path_factory.mktemp("pruned")), "doc_id",
+                             "text", n_buckets=8, compact_every=1, keep_recent=3)
+    for bid in range(6):
+        rows = [(bid * 3 + i, " ".join(random.choices(vocab, k=6)))
+                for i in range(3)]
+        sink.write_batch(spark.createDataFrame(rows, "doc_id long, text string"),
+                         bid)
+    store = sink.store
+    folded = {
+        v: any(r["n"].startswith("f")
+               for runs in store._load_manifest(v)["parts"].values() for r in runs)
+        for v in range(store.min_version, store.version + 1)
+    }
+    assert not all(folded.values()) and any(folded.values())
+    return store, folded
+
+
+@given(
+    sel=st.lists(st.integers(-2, 10), max_size=10),  # dups; 8.. and <0 absent
+    as_of=st.one_of(st.none(), st.integers(-1, 5)),
+    pick=st.integers(0, 2),
+)
+@settings(**_SETTINGS)
+def test_pruned_read_equals_filtered_full_read(spark, folded_postings_store,
+                                               sel, as_of, pick):
+    """``read_parts(sel)`` plus the as-of batch filter returns exactly the
+    rows of the full read at that version filtered to the same
+    partitions and batches — for any selection (duplicates and absent
+    partitions included), every horizon, before and after a fold."""
+    store, folded = folded_postings_store
+    versions = sorted(folded)
+    version = versions[pick % len(versions)]
+    cols = ["doc_id", "dl", "term", "tf", "batch"]
+
+    def batches(df):
+        return df if as_of is None else df.filter(F.col("batch") <= as_of)
+
+    got = batches(store.read_parts(spark, sel, version=version))
+    full = store.read_version(spark, version)
+    want = batches(full.filter(store.pid_expr().isin(sel)))
+    assert (sorted(tuple(r) for r in got.select(*cols).collect())
+            == sorted(tuple(r) for r in want.select(*cols).collect()))

@@ -1451,19 +1451,22 @@ def test_scoped_conf_restores_and_unsets(spark):
     assert spark.conf.get(key_set) == prev_tz
 
 
+def _max_runs_per_partition(store) -> int:
+    parts = store._load_manifest(store.version)["parts"]
+    return max(len(runs) for runs in parts.values())
+
+
 @pytest.mark.slow
 def test_auto_compaction_bounds_postings_layout(spark, tmp_path):
-    """Round-11 lead task: the tiered compaction policy, driven 64
-    batches deep through the postings sink. Asserts (a) the on-disk
-    layout stays BOUNDED — tail directories <= compact_every +
-    keep_recent, chunks <= max_chunks + 1, total reachable files far
-    below the one-dir-per-batch count; (b) current-state search equals a
-    batch bm25_search over the full corpus AFTER many automatic minor
-    folds and at least one size-tiered major merge; (c) as-of answers at
-    horizons inside chunks, across chunk boundaries, and in the live
-    tail all equal the batch engine over the matching prefix corpus;
-    (d) a foreachBatch redelivery of an already-folded batch is a no-op
-    (the crash-replay contract compaction must preserve)."""
+    """The postings store's size-tiered fold, driven 64 batches deep
+    through the sink. Asserts (a) the layout stays BOUNDED — at most
+    ``max_runs = compact_every + keep_recent`` runs per bucket, total
+    files far below one per batch and bucket; (b) current-state search
+    equals a batch bm25_search over the full corpus after many folds;
+    (c) as-of answers at early, mid and latest horizons all equal the
+    batch engine over the matching prefix corpus, however the runs
+    holding them were folded; (d) a foreachBatch redelivery of an
+    already-folded batch is a no-op (the crash-replay contract)."""
     import random
 
     from flinkrealtimedatawarehouse_spark.datapipeline import textstats
@@ -1479,25 +1482,18 @@ def test_auto_compaction_bounds_postings_layout(spark, tmp_path):
             for i in range(n_batches * per_batch)]
     idx = str(tmp_path / "acomp")
     sink = PostingsIndexSink(
-        idx, "doc_id", "text", n_buckets=8,
-        compact_every=8, keep_recent=2, max_chunks=3,
+        idx, "doc_id", "text", n_buckets=8, compact_every=8, keep_recent=2,
     )
     for bid in range(n_batches):
         sink.write_batch(
             _docs(spark, rows[bid * per_batch:(bid + 1) * per_batch]), bid
         )
 
-    st = sink.store._load()
-    # (a) bounded layout: multiple folds ran, a major merge ran (56
-    # foldable batches / 8 per fold = 7 chunks > max_chunks=3), and the
-    # listing surface is far below the 64-dirs-a-batch-partitioned
-    # layout would show
-    assert st["folded_through"] >= 48
-    assert len(sink.store._tail_batch_ids()) <= 8 + 2
-    assert 1 <= len(st["chunks"]) <= 3 + 1
-    assert any(c["n_batches"] > 8 for c in st["chunks"])  # merged chunk
-    n_files = sink.store.file_count(spark)
-    assert n_files <= (len(st["chunks"]) + len(sink.store._tail_batch_ids())) * 8
+    # (a) bounded layout: folds ran and every bucket holds <= max_runs runs
+    store = sink.store
+    assert store.folded_through() >= 0
+    assert _max_runs_per_partition(store) <= store.max_runs == 8 + 2
+    assert store.file_count(spark) <= 8 * store.max_runs < n_batches * 8
 
     # (b) current state == batch engine over the full corpus
     q = "alpha zeta"
@@ -1506,8 +1502,8 @@ def test_auto_compaction_bounds_postings_layout(spark, tmp_path):
     got = streamed_postings_search(spark, idx, "doc_id", q, k=15).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in expect]
 
-    # (c) as-of at an in-chunk, chunk-boundary, and live-tail horizon
-    for b in (0, 7, 8, 31, st["folded_through"], n_batches - 1):
+    # (c) as-of at early, mid and latest horizons
+    for b in (0, 7, 8, 31, 48, n_batches - 1):
         prefix = _docs(spark, rows[: (b + 1) * per_batch])
         exp_b = textstats.bm25_search(
             prefix, "doc_id", "text", q, k=15).collect()
@@ -1515,25 +1511,24 @@ def test_auto_compaction_bounds_postings_layout(spark, tmp_path):
             spark, idx, "doc_id", q, k=15, as_of_batch=b).collect()
         assert [tuple(r) for r in got_b] == [tuple(r) for r in exp_b], b
 
-    # (d) replay of a folded batch: no tail dir reappears, answers hold
+    # (d) replay of a folded batch: nothing is committed, answers hold
     replay_bid = 3
-    assert replay_bid <= st["folded_through"]
+    v = store.version
     sink.write_batch(
         _docs(spark, rows[replay_bid * per_batch:(replay_bid + 1) * per_batch]),
         replay_bid,
     )
-    import os
-    assert not os.path.isdir(
-        os.path.join(idx, "postings", f"batch={replay_bid}"))
+    assert store.version == v
     again = streamed_postings_search(spark, idx, "doc_id", q, k=15).collect()
     assert [tuple(r) for r in again] == [tuple(r) for r in expect]
 
 
 @pytest.mark.slow
 def test_auto_compaction_bounds_ivf_layout(spark, tmp_path):
-    """IVF twin of the 64-batch postings test, 32 batches deep: bounded
-    cell-partitioned layout, current + as-of top-k equal to the batch
-    engine over the matching prefix corpus across automatic folds."""
+    """IVF twin of the 64-batch postings test, 32 batches deep: at most
+    ``max_runs`` runs per corpus partition, current + as-of top-k equal
+    to the batch engine over the matching prefix corpus across folds,
+    and a redelivered batch is a no-op."""
     import random
 
     from flinkrealtimedatawarehouse_spark.datapipeline import similarity
@@ -1551,17 +1546,15 @@ def test_auto_compaction_bounds_ivf_layout(spark, tmp_path):
     schema = "vec_id long, embedding array<double>, label int"
     sink = IvfIndexSink(
         str(tmp_path / "vcomp"), "vec_id", "embedding", "label",
-        compact_every=6, keep_recent=2, max_chunks=3,
+        compact_every=6, keep_recent=2,
     )
+    batch = lambda bid: spark.createDataFrame(  # noqa: E731
+        rows[bid * per_batch:(bid + 1) * per_batch], schema)
     for bid in range(n_batches):
-        sink.write_batch(
-            spark.createDataFrame(
-                rows[bid * per_batch:(bid + 1) * per_batch], schema), bid
-        )
-    st = sink.store._load()
-    assert st["folded_through"] >= 18
-    assert len(sink.store._tail_batch_ids()) <= 6 + 2
-    assert len(st["chunks"]) <= 3 + 1
+        sink.write_batch(batch(bid), bid)
+    store = sink.store
+    assert store.folded_through() >= 0
+    assert _max_runs_per_partition(store) <= store.max_runs == 6 + 2
 
     probes = spark.createDataFrame(rows[:2], schema)
     expect = similarity.ivf_topk(
@@ -1569,7 +1562,7 @@ def test_auto_compaction_bounds_ivf_layout(spark, tmp_path):
         "vec_id", "embedding", "label", k=4, n_probe=2).collect()
     got = streamed_ivf_topk(spark, sink, probes, k=4, n_probe=2).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in expect]
-    for b in (0, st["folded_through"], n_batches - 1):
+    for b in (0, 18, n_batches - 1):
         prefix = spark.createDataFrame(rows[: (b + 1) * per_batch], schema)
         exp_b = similarity.ivf_topk(
             prefix, probes, "vec_id", "embedding", "label",
@@ -1577,6 +1570,12 @@ def test_auto_compaction_bounds_ivf_layout(spark, tmp_path):
         got_b = streamed_ivf_topk(
             spark, sink, probes, k=4, n_probe=2, as_of_batch=b).collect()
         assert [tuple(r) for r in got_b] == [tuple(r) for r in exp_b], b
+
+    v = store.version
+    sink.write_batch(batch(3), 3)  # redelivery of a folded batch: no-op
+    assert store.version == v
+    got = streamed_ivf_topk(spark, sink, probes, k=4, n_probe=2).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in expect]
 
 
 # --- streaming dedup-cluster upkeep (streaming/clusters.py) ----------------
@@ -2131,66 +2130,6 @@ def test_keystate_sink_simhash_and_embedding_twins(spark, tmp_path):
     assert got_l == {50: 0, 7: 1}
 
 
-@pytest.mark.slow
-def test_tiered_read_part_vals_equals_filtered_full_read(spark, tmp_path):
-    """Round 15 (guide §6): pruned tiered reads are CONSTRUCTED from the
-    selected partition-value directories (explicit paths + basePath)
-    instead of listing the whole batch=/bucket= tree and filtering. The
-    contract is literal row-set equality with read().filter(isin) — at
-    every as-of horizon, pre- and post-compaction, including selections
-    with missing/absent partition values."""
-    import random
-
-    from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
-        PostingsIndexSink,
-    )
-
-    random.seed(43)
-    vocab = ["alpha", "beta", "gamma", "delta", "zeta", "omega"]
-    n_batches, per_batch = 12, 3
-    rows = [(i, " ".join(random.choices(vocab, k=6)))
-            for i in range(n_batches * per_batch)]
-    idx = str(tmp_path / "pvals")
-    sink = PostingsIndexSink(
-        idx, "doc_id", "text", n_buckets=8,
-        compact_every=4, keep_recent=2, max_chunks=2,
-    )
-    for bid in range(n_batches):
-        sink.write_batch(
-            _docs(spark, rows[bid * per_batch:(bid + 1) * per_batch]), bid
-        )
-    store = sink.store
-    assert store.folded_through() >= 0  # compaction really ran
-    all_buckets = sorted(
-        r.bucket for r in store.read(spark).select("bucket").distinct().collect()
-    )
-    assert len(all_buckets) >= 2
-    cases = [
-        (None, all_buckets[:1]),              # single bucket, full depth
-        (None, all_buckets),                  # everything, full depth
-        (None, [10**6]),                      # absent value -> empty
-        (None, all_buckets[:2] + [10**6]),    # mixed present/absent
-        (1, all_buckets[:2]),                 # horizon inside a chunk
-        (store.folded_through(), all_buckets[:2]),  # chunk boundary
-        (n_batches - 1, all_buckets[:2]),     # live tail horizon
-    ]
-    from pyspark.sql import functions as F
-
-    for as_of, sel in cases:
-        expect = sorted(
-            tuple(r) for r in store.read(spark, as_of)
-            .filter(F.col("bucket").isin(sel))
-            .select("doc_id", "dl", "term", "tf", "bucket", "batch")
-            .collect()
-        )
-        got = sorted(
-            tuple(r) for r in store.read(spark, as_of, part_vals=sel)
-            .select("doc_id", "dl", "term", "tf", "bucket", "batch")
-            .collect()
-        )
-        assert got == expect, (as_of, sel)
-
-
 def test_postings_observed_stats_match_second_pass(spark, tmp_path):
     """Round 15: pins the postings stats fold's behavior independent of
     its implementation (an observation-based one-pass variant was tried
@@ -2212,8 +2151,7 @@ def test_postings_observed_stats_match_second_pass(spark, tmp_path):
         [(4, "alpha alpha delta zeta")],
     ]
     idx = str(tmp_path / "obstats")
-    sink = PostingsIndexSink(idx, "doc_id", "text", n_buckets=4,
-                             compact_every=None)
+    sink = PostingsIndexSink(idx, "doc_id", "text", n_buckets=4)
     for bid, rows in enumerate(batches):
         sink.write_batch(_docs(spark, rows), bid)
 
