@@ -551,10 +551,6 @@ SELECT probe_id, neighbor_id, cosine, rank::INT AS rank FROM (
 
 # --- dp8 language ID ------------------------------------------------------
 
-def q_lang_id(spark: SparkSession, sf: str) -> DataFrame:
-    d = textstats.lang_id(load_table(spark, sf, "documents"), "text")
-    return d.groupBy("lang", "pred_lang").agg(F.count(F.lit(1)).alias("ct"))
-
 def _duck_pred_lang(text_col: str = "text") -> str:
     """The lang-ID stopword-hits CASE expression, built ONCE from
     LANG_STOPWORDS — shared by every oracle that predicts a language so
@@ -569,77 +565,9 @@ def _duck_pred_lang(text_col: str = "text") -> str:
         f"WHEN {h} = {best} AND {best} > 0 THEN '{lang}'" for lang, h in hits.items()
     ) + " ELSE 'und' END"
 
-
-def _sql_lang_id() -> str:
-    return f"""
-SELECT lang, {_duck_pred_lang()} AS pred_lang, count(*)::BIGINT AS ct
-FROM documents GROUP BY 1, 2
-"""
-
-SQL_LANG_ID = _sql_lang_id()
-
 # --- dp9 quality scoring --------------------------------------------------
 
-def q_quality(spark: SparkSession, sf: str) -> DataFrame:
-    d = textstats.quality_score(load_table(spark, sf, "documents"), "text")
-    return d.groupBy("source").agg(
-        F.round(F.avg("quality"), 4).alias("avg_quality"),
-        F.round(F.avg("n_tokens"), 2).alias("avg_tokens"),
-        F.round(F.avg("alnum_ratio"), 4).alias("avg_alnum"),
-    )
-
 _EN_STOPS = ", ".join(repr(w) for w in textstats.LANG_STOPWORDS["en"])
-
-SQL_QUALITY = f"""
-WITH d AS (
-  SELECT source,
-         {duck_tokens('text')} AS toks,
-         length(text) AS n_chars,
-         length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')) AS alnum
-  FROM documents
-), m AS (
-  SELECT source, len(toks) AS n_tokens,
-         CASE WHEN n_chars > 0 THEN alnum::DOUBLE / n_chars ELSE 0.0 END AS alnum_ratio,
-         CASE WHEN len(toks) > 0
-              THEN len(list_filter(toks, t -> t IN ({_EN_STOPS})))::DOUBLE / len(toks)
-              ELSE 0.0 END AS stop_ratio
-  FROM d
-), s AS (
-  SELECT source, n_tokens, round(alnum_ratio, 6) AS alnum_ratio,
-         round(0.4 * least(n_tokens::DOUBLE / 100.0, 1.0)
-             + 0.3 * alnum_ratio
-             + 0.3 * least(stop_ratio * 5.0, 1.0), 6) AS quality
-  FROM m
-)
-SELECT source, round(avg(quality), 4) AS avg_quality,
-       round(avg(n_tokens), 2) AS avg_tokens,
-       round(avg(alnum_ratio), 4) AS avg_alnum
-FROM s GROUP BY 1
-"""
-
-# --- dp10 token counting --------------------------------------------------
-
-def q_token_count(spark: SparkSession, sf: str) -> DataFrame:
-    d = textstats.token_counts(load_table(spark, sf, "documents"), "text")
-    return d.groupBy("source").agg(
-        F.sum("ws_tokens").alias("ws_total"),
-        F.sum("bpe_est_tokens").alias("bpe_total"),
-        F.count(F.lit(1)).alias("ct"),
-    )
-
-SQL_TOKEN_COUNT = f"""
-WITH d AS (
-  SELECT source,
-         len(list_filter(string_split_regex(text, '{textstats.WS_RE}'), t -> length(t) > 0)) AS ws_tokens,
-         coalesce(list_sum(list_transform({duck_tokens('text')},
-                                          t -> ceil(length(t) / 4.0)::BIGINT)), 0)
-         + length(regexp_replace(lower(text), '{textstats.NON_PUNCT_RE}', '', 'g')) AS bpe_est
-  FROM documents
-)
-SELECT source, sum(ws_tokens)::BIGINT AS ws_total, sum(bpe_est)::BIGINT AS bpe_total,
-       count(*)::BIGINT AS ct
-FROM d GROUP BY 1
-"""
 
 # --- dp11 document fingerprinting ----------------------------------------
 
@@ -786,32 +714,6 @@ SELECT probe_id, neighbor_id, cosine, rank::INT AS rank FROM (
 ) WHERE rank <= {_TK_K}
 """
 
-
-# --- dp14 repetition / boilerplate signals (Gopher-style) -----------------
-
-def q_repetition(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents").filter(F.col("doc_id") % 25 == 0)
-    return textstats.repetition_stats(docs, "doc_id", "text")
-
-SQL_REPETITION = f"""
-WITH a AS (SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0),
-tk AS (SELECT doc_id, {duck_tokens('text')} AS toks FROM a),
-f AS (
-  SELECT doc_id, toks, len(toks)::INT AS n_tokens,
-         len(list_distinct(toks)) AS n_distinct,
-         {duck_shingles('toks', 2)} AS bigrams
-  FROM tk WHERE len(toks) > 0
-),
-ex AS (SELECT doc_id, unnest(bigrams) AS bg FROM f),
-ct AS (SELECT doc_id, bg, count(*) AS ct FROM ex GROUP BY 1, 2),
-tp AS (SELECT doc_id, max(ct) AS top_bg_ct FROM ct GROUP BY 1)
-SELECT f.doc_id, n_tokens,
-       n_distinct::BIGINT AS n_distinct,
-       coalesce(top_bg_ct, 0)::BIGINT AS top_bg_ct,
-       round(n_distinct::DOUBLE / n_tokens, 6) AS ttr,
-       round(coalesce(top_bg_ct, 0)::DOUBLE * 2 / n_tokens, 6) AS top_bigram_frac
-FROM f LEFT JOIN tp ON f.doc_id = tp.doc_id
-"""
 
 # --- dp15 PII redaction ---------------------------------------------------
 
@@ -1191,15 +1093,9 @@ SELECT 'stream' AS branch, * FROM ({_SQL_CC_CORE})
 
 _MIX_RATES = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.1}
 
-def q_mix_sample(spark: SparkSession, sf: str) -> DataFrame:
-    kept = textstats.mix_sample(
-        load_table(spark, sf, "documents"), "doc_id", _MIX_RATES, "source"
-    )
-    return kept.groupBy("source").agg(F.count(F.lit(1)).alias("ct"))
-
 def _duck_mix_conds() -> str:
-    """The mix-sampling keep predicate, built ONCE from _MIX_RATES —
-    shared by the dp20 oracle and the composed mix->pack oracle so the
+    """The mix-sampling keep predicate of the composed mix->pack oracle,
+    built from the same _MIX_RATES the Spark side samples with so the
     hash bucket modulus / rate rounding can never diverge."""
     bucket = f"{duck_phash('doc_id::VARCHAR')} % 10000"
     return " OR ".join(
@@ -1207,31 +1103,13 @@ def _duck_mix_conds() -> str:
         for s, r in _MIX_RATES.items()
     )
 
-
-def _sql_mix() -> str:
-    return f"""
-SELECT source, count(*)::BIGINT AS ct FROM documents
-WHERE {_duck_mix_conds()} GROUP BY 1
-"""
-
-SQL_MIX_SAMPLE = _sql_mix()
-
 # --- dp21 token-budget sequence packing -----------------------------------
 
 _PACK_BUDGET = 4096
 
-def q_pack_bins(spark: SparkSession, sf: str) -> DataFrame:
-    packed = textstats.pack_bins(
-        load_table(spark, sf, "documents"), "doc_id", "n_chars", _PACK_BUDGET, part_col="source"
-    )
-    return packed.groupBy("source", "bin").agg(
-        F.count(F.lit(1)).alias("doc_ct"), F.sum("n_chars").alias("tok_sum")
-    )
-
 def _duck_pack_sql(src: str) -> str:
-    """The pack-bins cumulative-sum/bin SQL over any source relation —
-    shared by the dp21 oracle and the composed mix->pack oracle so the
-    bin formula lives in exactly one place."""
+    """The pack-bins cumulative-sum/bin SQL over any source relation
+    (the composed mix->pack oracle's ``pack`` branch)."""
     return f"""
 WITH c AS (
   SELECT source, n_chars,
@@ -1243,9 +1121,6 @@ SELECT source, floor((cum - n_chars) / {_PACK_BUDGET})::BIGINT AS bin,
        count(*)::BIGINT AS doc_ct, sum(n_chars)::BIGINT AS tok_sum
 FROM c GROUP BY 1, 2
 """
-
-
-SQL_PACK_BINS = _duck_pack_sql("documents")
 
 
 # --- dp23 corpus length quantiles -----------------------------------------

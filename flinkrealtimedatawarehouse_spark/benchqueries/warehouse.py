@@ -112,19 +112,6 @@ UNION ALL
 SELECT 'dq', rule, violation_ct, total_ct FROM ({SQL_P1Q})
 """
 
-# P2 delete-op filter (CDC analog: event_type='error' plays op=delete)
-def q_p2(spark: SparkSession, sf: str) -> DataFrame:
-    ev = load_table(spark, sf, "events")
-    cdc = ev.withColumn(
-        "type", F.when(F.col("event_type") == "error", "delete").otherwise("upsert")
-    )
-    return logsplit.delete_filter(cdc).groupBy("event_type").agg(F.count(F.lit(1)).alias("ct"))
-
-SQL_P2 = """
-SELECT event_type, count(*)::BIGINT AS ct
-FROM events WHERE event_type <> 'error' GROUP BY event_type
-"""
-
 # P3 three-way split + display explode (start analog: signup)
 def q_p3(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")
@@ -226,20 +213,8 @@ SELECT 'age', l_returnflag,
 FROM lineitem GROUP BY 2
 """
 
-# J1 interval join ±5 min (order ⋈ detail analog: purchase ⋈ click per user)
-def q_j1(spark: SparkSession, sf: str) -> DataFrame:
-    ev = load_table(spark, sf, "events")
-    left = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("l_user"), F.col("ts").alias("l_ts")
-    )
-    right = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("r_user"), F.col("ts").alias("r_ts"), F.col("value").alias("r_val")
-    )
-    j = joins.interval_join(left, right, ("l_user", "r_user"), ("l_ts", "r_ts"), "'-5' MINUTE", "'5' MINUTE")
-    return j.groupBy(F.date_format("l_ts", "yyyy-MM-dd").alias("dt")).agg(
-        F.count(F.lit(1)).alias("pair_ct"), F.round(F.sum("r_val"), 2).alias("val_sum")
-    )
-
+# J1 interval join ±5 min (purchase ⋈ click per user) — the oracle the
+# t3 streaming interval joins hash against
 SQL_J1 = """
 SELECT strftime(l.ts, '%Y-%m-%d') AS dt, count(*)::BIGINT AS pair_ct,
        round(sum(r.value), 2) AS val_sum
@@ -250,20 +225,8 @@ FROM events l JOIN events r
 GROUP BY 1
 """
 
-# J2 asymmetric interval join [-15 min, 0] (payment ⋈ order analog)
-def q_j2(spark: SparkSession, sf: str) -> DataFrame:
-    ev = load_table(spark, sf, "events")
-    pay = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
-    )
-    orderv = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("o_user"), F.col("ts").alias("o_ts")
-    )
-    j = joins.interval_join(pay, orderv, ("p_user", "o_user"), ("p_ts", "o_ts"), "'-15' MINUTE", "'0' SECOND")
-    return j.groupBy(F.date_format("p_ts", "yyyy-MM-dd").alias("dt")).agg(
-        F.count(F.lit(1)).alias("pair_ct")
-    )
-
+# J2 asymmetric interval join [-15 min, 0] (purchase ⋈ view) — the t3b
+# streaming join's inner-pair oracle
 SQL_J2 = """
 SELECT strftime(p.ts, '%Y-%m-%d') AS dt, count(*)::BIGINT AS pair_ct
 FROM events p JOIN events o
@@ -446,15 +409,6 @@ def q_w3_sql(spark: SparkSession, sf: str) -> DataFrame:
         GROUP BY window(ts, '1 hour'), word
     """)
 
-
-# A5 daily unique visitors
-def q_a5(spark: SparkSession, sf: str) -> DataFrame:
-    return dedup.daily_unique_counts(load_table(spark, sf, "events"), "user_id", "ts")
-
-SQL_A5 = """
-SELECT strftime(ts, '%Y-%m-%d') AS dt, count(DISTINCT user_id)::BIGINT AS uv_ct
-FROM events GROUP BY 1
-"""
 
 # A6 is_new correction (signup rows play is_new='1')
 def q_a6(spark: SparkSession, sf: str) -> DataFrame:
@@ -1208,18 +1162,6 @@ SELECT user_id, event_id,
 FROM l WHERE ie = 1
 """
 
-# W2 window-bound stamping (15-minute tumble)
-def q_w2(spark: SparkSession, sf: str) -> DataFrame:
-    ev = load_table(spark, sf, "events")
-    return ev.groupBy(*aggs.window_bounds("ts", "15 minutes")).agg(F.count(F.lit(1)).alias("ct"))
-
-SQL_W2 = f"""
-SELECT strftime(time_bucket(INTERVAL '15 minutes', ts), '{DUCK_FMT}') AS stt,
-       strftime(time_bucket(INTERVAL '15 minutes', ts) + INTERVAL '15 minutes', '{DUCK_FMT}') AS edt,
-       count(*)::BIGINT AS ct
-FROM events GROUP BY 1, 2
-"""
-
 # U1 3-stream visitor union (pv/uv/uj) -> daily stats
 def _u1_base(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")
@@ -1240,9 +1182,6 @@ def _u1_base(spark: SparkSession, sf: str) -> DataFrame:
         measures=measures,
     )
     return unions.tumble_sum(u, [], "ts", measures, "1 day")
-
-def q_u1(spark: SparkSession, sf: str) -> DataFrame:
-    return _u1_base(spark, sf)
 
 _SQL_U1_BASE = f"""
 WITH e AS (
@@ -1274,8 +1213,6 @@ SELECT strftime(time_bucket(INTERVAL '1 day', ts), '{DUCK_FMT}') AS stt,
        round(sum(dur_sum), 2)::DOUBLE AS dur_sum
 FROM s GROUP BY 1, 2
 """
-
-SQL_U1 = _SQL_U1_BASE
 
 # A11 derived ratio metrics over the U1 daily stats
 def q_a11(spark: SparkSession, sf: str) -> DataFrame:
@@ -1378,54 +1315,6 @@ SQL_U2C = f"""
 SELECT *, 'union' AS kind FROM ({SQL_U2})
 UNION ALL
 SELECT *, 'fused' AS kind FROM ({SQL_U2})
-"""
-
-# O1 top keywords by raw count (order by desc limit)
-def q_o1(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents")
-    toks = explode_tokens(docs.select("text"), "text")
-    return (
-        toks.groupBy("word").agg(F.count(F.lit(1)).alias("ct"))
-        .orderBy(F.col("ct").desc(), F.col("word").asc())
-        .limit(15)
-    )
-
-SQL_O1 = """
-WITH t AS (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                            s -> length(s) > 0)) AS word
-  FROM documents
-)
-SELECT word, count(*)::BIGINT AS ct FROM t GROUP BY 1 ORDER BY ct DESC, word LIMIT 15
-"""
-
-# O2 hour-of-day series
-def q_o2(spark: SparkSession, sf: str) -> DataFrame:
-    ev = load_table(spark, sf, "events")
-    return (
-        ev.groupBy(F.hour("ts").cast("long").alias("hr"))
-        .agg(F.count(F.lit(1)).alias("ct"))
-        .orderBy("hr")
-    )
-
-SQL_O2 = """
-SELECT hour(ts)::BIGINT AS hr, count(*)::BIGINT AS ct FROM events GROUP BY 1 ORDER BY 1
-"""
-
-# F1 tokenizer word frequencies (full corpus)
-def q_f1(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents")
-    return explode_tokens(docs.select("text"), "text").groupBy("word").agg(
-        F.count(F.lit(1)).alias("ct")
-    )
-
-SQL_F1 = """
-WITH t AS (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                            s -> length(s) > 0)) AS word
-  FROM documents
-)
-SELECT word, count(*)::BIGINT AS ct FROM t GROUP BY 1
 """
 
 # K3 MERGE upsert (latest-wins per pk)
@@ -1589,28 +1478,6 @@ UNION ALL
 SELECT 'diff', dim, ct, bal, m2 FROM ({SQL_K3D})
 """
 
-# X1 skew-safe two-stage aggregation == plain aggregation (TPC-H Q1 shape)
-def q_x1(spark: SparkSession, sf: str) -> DataFrame:
-    li = load_table(spark, sf, "lineitem")
-    out = scale.salted_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        {"ct": ("l_quantity", "count"), "sum_qty": ("l_quantity", "sum"),
-         "sum_price": ("l_extendedprice", "sum")},
-        n_salts=16,
-        salt_source="l_orderkey",
-    )
-    return out.select(
-        "l_returnflag", "l_linestatus", "ct",
-        F.round("sum_qty", 2).alias("sum_qty"), F.round("sum_price", 2).alias("sum_price"),
-    )
-
-SQL_X1 = """
-SELECT l_returnflag, l_linestatus, count(*)::BIGINT AS ct,
-       round(sum(l_quantity), 2) AS sum_qty, round(sum(l_extendedprice), 2) AS sum_price
-FROM lineitem GROUP BY 1, 2
-"""
-
 # Bucketed-table staging for X2/XC: once per (session, sf). The gate
 # queries are re-evaluated many times in one session (warm-up + timed
 # runs + both check sfs); rewriting two managed tables per evaluation
@@ -1635,14 +1502,7 @@ def _bucketed_pair(spark: SparkSession, sf: str) -> tuple[str, str]:
     return bo, bc
 
 
-# X2 co-bucketed exchange-free join == plain join
-def q_x2(spark: SparkSession, sf: str) -> DataFrame:
-    bo, bc = _bucketed_pair(spark, sf)
-    j = scale.bucketed_join(spark, bo, bc, ("o_custkey", "c_custkey"), force_smj=True)
-    return j.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("ct"), F.round(F.sum("o_totalprice"), 2).alias("rev")
-    )
-
+# X2 co-bucketed join == plain join — the x2 gate entry's oracle
 SQL_X2 = """
 SELECT c_mktsegment, count(*)::BIGINT AS ct, round(sum(o_totalprice), 2) AS rev
 FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1

@@ -108,9 +108,4 @@ TABLE_PROCESS_SCHEMA = T.StructType(
 
 # --- gold (output) schemas (FIXTURES.md §3) ---------------------------------
 
-VISITOR_STATS_COLUMNS = (
-    "stt", "edt", "vc", "ch", "ar", "is_new",
-    "uv_ct", "pv_ct", "sv_ct", "uj_ct", "dur_sum", "ts",
-)
-
 KEYWORD_STATS_COLUMNS = ("keyword", "ct", "source", "stt", "edt", "ts")

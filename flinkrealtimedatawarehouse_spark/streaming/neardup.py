@@ -1,48 +1,51 @@
-"""Streaming near-duplicate detection: MinHash-LSH band state over a
+"""Streaming near-duplicate detection: first-arrival keyed state over a
 document stream (north-star LLM-ingest operator; the streaming twin of
-``datapipeline.textdedup.minhash_near_dups``).
+the batch candidate stages in ``datapipeline.textdedup``).
 
 A batch near-dedup pass over a 100 TB corpus is a full re-shuffle of every
-document's band keys. An INGEST pipeline can't afford that per increment:
-new documents must be checked against everything already accepted, in one
-pass, touching only state proportional to the accepted corpus's band
-keys. That is this operator:
+document's collision keys. An INGEST pipeline can't afford that per
+increment: new documents must be checked against everything already
+accepted, in one pass, touching only state proportional to the accepted
+corpus's keys. That is ``KeyStateNearDupSink``, the reference's keyed
+first-arrival rule (rt/app/dwd/UniqueVisitApp.java:60-78) over collision
+keys:
 
-- per micro-batch, compute each new doc's MinHash signature and its
-  ``bands`` LSH band keys (identical expressions to the batch operator —
-  ``hashing.py`` — so batch and stream agree bit-for-bit);
-- a document is flagged ``is_near_dup=1`` iff any of its band keys was
+- per micro-batch, a key derivation maps each new doc to its collision
+  keys — one of three families, each with expressions identical to its
+  batch operator so batch and stream agree bit-for-bit:
+  ``minhash_band_keys`` (MinHash-LSH bands), ``simhash_band_keys``
+  (SimHash bands) and ``embedding_bucket_keys`` (hyperplane sign
+  buckets);
+- a document is flagged ``is_near_dup=1`` iff any of its keys was
   ALREADY in the pre-batch state (it arrived in an earlier batch — true
   first-arrival-wins: a late-arriving duplicate marks ITSELF, even when
   its doc_id is smaller than the already-emitted holder's), or a smaller
   doc_id claims the key WITHIN the same batch;
-- the band-key state (one row per distinct band key: the minimum doc_id
-  that ever claimed it) absorbs the batch's keys afterwards.
+- the key state (one row per distinct key: the minimum doc_id that ever
+  claimed it) absorbs the batch's keys afterwards.
 
 Under an id-ordered replay the two rules reduce to the directional batch
-relation "doc d is a near-dup candidate iff some d' < d shares a band" —
+relation "doc d is a near-dup candidate iff some d' < d shares a key" —
 which is what the DuckDB oracle checks (any split, pinned in tests
 including a late-small-id case, mirroring ``SpanStateDedupSink``). Under
 out-of-order arrival the semantics are first-arrival-wins: whichever
 occurrence of a duplicate group is emitted first goes unflagged, every
 later one is flagged, so no duplicate pair is ever silently lost.
 
-State size: O(distinct band keys) ~ O(accepted docs × bands) rows of
-(int, string, long). Since round 12 the state lives in a
-``PartitionedSnapshotStore`` (streaming/partstore.py): every commit
-APPENDS the batch's min-per-key delta into hash partitions
-(``pmod(xxhash64(band_idx, band_key), P)``) instead of rewriting the
-table, reads are min-merged on the fly and PRUNED to the partitions the
-batch's keys hash into, and per-partition size-tiered folds bound run
-counts at O(log B) amortized rewrites per row — per-batch write volume
-is O(|batch|), never O(|state|). The per-batch compute is one groupBy
-over the batch's band keys + one equi-join against the pruned state —
-never a corpus scan.
+State size: O(distinct keys) ~ O(accepted docs × keys per doc) rows of
+(string, long) in a ``PartitionedSnapshotStore`` (streaming/partstore.py):
+every commit APPENDS the batch's min-per-key delta into hash partitions
+instead of rewriting the table, reads are min-merged on the fly and
+PRUNED to the partitions the batch's keys hash into, and per-partition
+size-tiered folds bound run counts at O(log B) amortized rewrites per
+row — per-batch write volume is O(|batch|), never O(|state|). The
+per-batch compute is one groupBy over the batch's keys + one equi-join
+against the pruned state — never a corpus scan.
 
-Candidate flags are LSH-level (no Jaccard verify stage): the streaming
+Candidate flags are key-level (no Jaccard verify stage): the streaming
 contract is "cheap online filter, exact offline verify" — chain
 ``textdedup.jaccard_verify`` over the flagged pairs offline when the
-band-collision false-positive rate matters.
+collision false-positive rate matters.
 """
 
 from __future__ import annotations
@@ -64,186 +67,6 @@ from flinkrealtimedatawarehouse_spark.streaming.partstore import (
     min_merge,
     min_struct_merge,
 )
-
-
-class BandStateNearDupSink(PartitionedSnapshotStore):
-    """foreachBatch sink: maintains the band-key -> min-doc-id state and
-    appends per-doc ``is_near_dup`` flags for every micro-batch.
-
-    Durability/replay from PartitionedSnapshotStore (state runs live
-    under ``base_dir/state``): each commit appends the batch's
-    min-per-key delta — O(|batch|) write, with state reads pruned to the
-    batch's hash partitions and size-tiered folds bounding run counts.
-    The state fold (min per band key) is idempotent and flags use
-    per-``_bid`` dynamic overwrite, so a redelivered batch would be
-    harmless anyway — the batch-id guard just skips the wasted work.
-    """
-
-    def __init__(self, base_dir: str, id_col: str, text_col: str,
-                 shingle_n: int = 3, k: int = 16, bands: int = 8,
-                 lineage: str | None = None, cluster_sink=None,
-                 n_partitions: int = 8):
-        super().__init__(os.path.join(base_dir, "state"),
-                         key_cols=["band_idx", "band_key"],
-                         merge_fn=min_merge(["band_idx", "band_key"],
-                                            ["min_id"]),
-                         n_partitions=n_partitions, lineage=lineage)
-        self.flags_dir = os.path.join(base_dir, "flags")
-        self.id_col = id_col
-        self.text_col = text_col
-        self.shingle_n = shingle_n
-        self.k = k
-        self.bands = bands
-        # optional downstream ClusterUpkeepSink (streaming/clusters.py):
-        # when attached, every micro-batch ALSO emits its pair edges —
-        # (doc, witness) where witness = the band key's pre-batch state
-        # minimum (the earlier holder) or the within-batch minimum for
-        # first-seen keys — and folds them into the incremental
-        # connected-components label table. Connectivity through band
-        # minima equals band-sharing connectivity (every claimant of a
-        # key chains through the key's evolving minimum), so the label
-        # table converges to CC over the full LSH candidate graph: the
-        # complete one-pass streaming dedup DAG, docs -> flags -> pair
-        # edges -> canonical cluster ids, one micro-batch at a time.
-        self.cluster_sink = cluster_sink
-
-    def init(self, spark: SparkSession) -> None:
-        self.snapshot_init(spark.createDataFrame(
-            [], "band_idx int, band_key string, min_id long"
-        ))
-
-    def state(self, spark: SparkSession) -> DataFrame:
-        return self.current(spark)
-
-    def flags(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.flags_dir).drop("_bid")
-
-    # -- per-batch ---------------------------------------------------------
-    def write_batch(self, batch: DataFrame, batch_id: int) -> None:
-        cs = self.cluster_sink
-        if self.seen(batch_id) and (cs is None or cs.seen(batch_id)):
-            return  # at-least-once redelivery, both sinks committed: no-op
-        spark = batch.sparkSession
-        sigs = minhash_signatures(
-            batch, self.id_col, self.text_col, self.shingle_n, self.k
-        )
-        rows_per_band = self.k // self.bands
-        band_rows = lsh_band_rows(sigs, self.id_col, self.bands, rows_per_band)
-        # multiple actions read this lineage (flags write, state commit,
-        # and — composed — the cluster fold's own joins), and the CPU-
-        # dense signature stage would otherwise re-run per action
-        # (measured at sf1: composed per-batch wall 8.5-10.8 s without
-        # the persist, 5-6 s with)
-        band_rows.persist()
-        try:
-            self._apply_batch(spark, batch, band_rows, batch_id)
-        finally:
-            band_rows.unpersist()
-
-    def _apply_batch(self, spark, batch, band_rows, batch_id: int) -> None:
-        cs = self.cluster_sink
-        # one min-per-key aggregate serves the witness derivation, the
-        # flag rule AND the state delta; its keys also give the partition
-        # set every state read below is pruned to (bounded collect: at
-        # most n_partitions ints — partstore.pids_of's contract). Persist:
-        # the pid collect, flag join, witness join and delta write are
-        # four actions over it.
-        batch_min = band_rows.groupBy("band_idx", "band_key").agg(
-            F.min(self.id_col).alias("_bmin")
-        )
-        batch_min.persist()
-        try:
-            self._apply_batch_inner(spark, batch, band_rows, batch_min, batch_id)
-        finally:
-            batch_min.unpersist()
-
-    def _apply_batch_inner(self, spark, batch, band_rows, batch_min,
-                           batch_id: int) -> None:
-        cs = self.cluster_sink
-        touched = self.pids_of(batch_min)
-        if cs is not None and not cs.seen(batch_id):
-            # Pair edges for the downstream cluster sink, derived from the
-            # PRE-BATCH state VERSION — not the live state — so a crash
-            # between the two sinks' commits replays with byte-identical
-            # edges (snapshot_init writes v0 empty and each applied batch
-            # commits one version, so version b IS the state before batch
-            # b, still addressable even after this sink committed b).
-            # Pruned to the batch's partitions: a witness for a batch key
-            # can only live where that key hashes.
-            prior = self.read_parts(spark, touched, version=batch_id).select(
-                "band_idx", "band_key", F.col("min_id").alias("_w")
-            )
-            witness = batch_min.join(
-                prior, ["band_idx", "band_key"], "left"
-            ).select(
-                "band_idx", "band_key", F.coalesce("_w", "_bmin").alias("_w")
-            )
-            edges = (
-                band_rows.join(witness, ["band_idx", "band_key"])
-                .filter(F.col(self.id_col) != F.col("_w"))
-                .select(
-                    F.least(F.col(self.id_col), F.col("_w")).alias("id_a"),
-                    F.greatest(F.col(self.id_col), F.col("_w")).alias("id_b"),
-                )
-                .distinct()
-                # the cluster fold runs several actions over its input
-                # (CC rounds, remap joins, snapshot write); checkpoint the
-                # small edge set so none of them re-derives it
-                .localCheckpoint(eager=True)
-            )
-            cs.write_batch(edges, batch_id)
-        if self.seen(batch_id):
-            return  # flags/state already committed; only clusters lagged
-
-        # first-arrival-wins (the f6ae7d7 rule, same as SpanStateDedupSink):
-        # a doc is flagged iff a band key was in the PRE-batch state — so a
-        # late-arriving smaller-id duplicate marks itself instead of
-        # silently unseating the already-emitted holder — or a smaller id
-        # claims the key within this batch. Under id-ordered replay this
-        # equals the old merged-min rule (state ids are all smaller), so
-        # the batch oracle still holds for any split. The membership probe
-        # reads only the batch's own partitions.
-        seen_before = self.read_parts(spark, touched).select(
-            "band_idx", "band_key"
-        ).withColumn("_prior", F.lit(True))
-        flagged = (
-            band_rows.join(batch_min, ["band_idx", "band_key"])
-            .join(seen_before, ["band_idx", "band_key"], "left")
-            .groupBy(self.id_col)
-            .agg(
-                F.max(
-                    (
-                        F.col("_prior").isNotNull()
-                        | (F.col("_bmin") < F.col(self.id_col))
-                    ).cast("int")
-                ).alias("is_near_dup")
-            )
-        )
-        # docs with too few tokens never produce band rows -> never dups
-        out = (
-            batch.select(self.id_col)
-            .join(flagged, self.id_col, "left")
-            .select(
-                self.id_col,
-                F.coalesce("is_near_dup", F.lit(0)).alias("is_near_dup"),
-                F.lit(batch_id).alias("_bid"),
-            )
-        )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bid")
-            .parquet(self.flags_dir)
-        )
-        # state delta = the batch's min per band key, O(|batch|) rows; the
-        # store's merge-on-read min-folds it against history — the full
-        # state table is never rewritten
-        self.commit_batch(
-            batch_min.select(
-                "band_idx", "band_key", F.col("_bmin").alias("min_id")
-            ),
-            batch_id,
-        )
 
 
 class SpanStateDedupSink(PartitionedSnapshotStore):
@@ -393,34 +216,30 @@ class SpanStateDedupSink(PartitionedSnapshotStore):
         )
 
 
-# --- generic keyed-state near-dup flagging (SimHash / embedding twins) ----
-
 class KeyStateNearDupSink(PartitionedSnapshotStore):
-    """First-arrival near-dup flagging over an ARBITRARY key derivation —
-    the generalization that gives the OTHER dedup families their
-    streaming twins (the MinHash band family keeps its dedicated
-    ``BandStateNearDupSink`` above, which additionally supports the
-    composed cluster-upkeep DAG).
+    """foreachBatch sink: maintains the key -> min-doc-id state and
+    appends per-doc ``is_near_dup`` flags for every micro-batch (the
+    first-arrival rule of the module docstring).
 
     ``key_rows_fn(batch) -> DataFrame[(id_col, key string)]`` maps a
-    micro-batch to one row per (doc, collision key): SimHash band bytes
-    (``simhash_band_keys``), embedding sign buckets
-    (``embedding_bucket_keys``), or any future family. The algebra is
-    the band sink's, on a single generic key column: a doc is flagged
-    iff some key was in the PRE-batch state (first-arrival-wins) or a
-    smaller id claims it within the batch; state then absorbs the batch
-    as min-id-per-key. Under id-ordered replay flags equal the batch
-    directional relation "∃ d' < d sharing a key" for any split — the
-    property the dp22 gate's shflags/edflags DuckDB twins encode.
+    micro-batch to one row per (doc, collision key): MinHash band keys
+    (``minhash_band_keys``), SimHash band keys (``simhash_band_keys``),
+    embedding sign buckets (``embedding_bucket_keys``), or any future
+    family. Under id-ordered replay flags equal the batch directional
+    relation "∃ d' < d sharing a key" for any split — the property the
+    dp22 gate's neardup/shflags/edflags DuckDB twins encode.
 
-    Scale shape is the band sink's too: state is O(distinct keys), the
-    per-batch work is one groupBy over the batch's keys + one equi-join
-    against state pruned to the batch's hash partitions — never a corpus
-    scan; commits append O(|batch|) deltas (PartitionedSnapshotStore).
+    Durability/replay from PartitionedSnapshotStore (state runs live
+    under ``base_dir/state``): each commit appends the batch's
+    min-per-key delta. The state fold (min per key) is idempotent and
+    flags use per-``_bid`` dynamic overwrite, so a redelivered batch
+    would be harmless anyway — the batch-id guard just skips the wasted
+    work.
     """
 
     def __init__(self, base_dir: str, id_col: str, key_rows_fn,
-                 lineage: str | None = None, n_partitions: int = 8):
+                 lineage: str | None = None, n_partitions: int = 8,
+                 cluster_sink=None):
         super().__init__(os.path.join(base_dir, "state"),
                          key_cols=["key"],
                          merge_fn=min_merge(["key"], ["min_id"]),
@@ -428,6 +247,18 @@ class KeyStateNearDupSink(PartitionedSnapshotStore):
         self.flags_dir = os.path.join(base_dir, "flags")
         self.id_col = id_col
         self.key_rows_fn = key_rows_fn
+        # optional downstream ClusterUpkeepSink (streaming/clusters.py):
+        # when attached, every micro-batch ALSO emits its pair edges —
+        # (doc, witness) where witness = the key's pre-batch state
+        # minimum (the earlier holder) or the within-batch minimum for
+        # first-seen keys — and folds them into the incremental
+        # connected-components label table. Connectivity through key
+        # minima equals key-sharing connectivity (every claimant of a
+        # key chains through the key's evolving minimum), so the label
+        # table converges to CC over the full candidate graph: the
+        # complete one-pass streaming dedup DAG, docs -> flags -> pair
+        # edges -> canonical cluster ids, one micro-batch at a time.
+        self.cluster_sink = cluster_sink
 
     def init(self, spark: SparkSession) -> None:
         self.snapshot_init(
@@ -441,23 +272,66 @@ class KeyStateNearDupSink(PartitionedSnapshotStore):
         return spark.read.parquet(self.flags_dir).drop("_bid")
 
     def write_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if self.seen(batch_id):
-            return
+        cs = self.cluster_sink
+        if self.seen(batch_id) and (cs is None or cs.seen(batch_id)):
+            return  # at-least-once redelivery, every sink committed: no-op
         spark = batch.sparkSession
         kr = self.key_rows_fn(batch).select(self.id_col, "key")
+        # multiple actions read the key rows (flag join, and — composed —
+        # the edge join and the cluster fold's own joins), and the
+        # CPU-dense key derivation (MinHash/SimHash signatures) would
+        # otherwise re-run per action (measured at sf1 on the composed
+        # MinHash DAG: per-batch wall 8.5-10.8 s without the persist,
+        # 5-6 s with)
+        kr.persist()
+        # one min-per-key aggregate serves the witness derivation, the
+        # flag rule AND the state delta; its keys also give the partition
+        # set every state read below is pruned to (bounded collect: at
+        # most n_partitions ints — partstore.pids_of's contract)
         batch_min = kr.groupBy("key").agg(F.min(self.id_col).alias("_bmin"))
-        # persisted: the key derivation can be CPU-dense (SimHash family),
-        # and the pid collect, flag join and delta commit are three
-        # actions over this aggregate
         batch_min.persist()
         try:
-            self._flag_and_commit(spark, batch, kr, batch_min, batch_id)
+            self._apply_batch(spark, batch, kr, batch_min, batch_id)
         finally:
             batch_min.unpersist()
+            kr.unpersist()
 
-    def _flag_and_commit(self, spark, batch, kr, batch_min,
-                         batch_id: int) -> None:
+    def _apply_batch(self, spark, batch, kr, batch_min, batch_id: int) -> None:
+        cs = self.cluster_sink
         touched = self.pids_of(batch_min)
+        if cs is not None and not cs.seen(batch_id):
+            # Pair edges for the downstream cluster sink, derived from the
+            # PRE-BATCH state VERSION — not the live state — so a crash
+            # between the two sinks' commits replays with byte-identical
+            # edges (snapshot_init writes v0 empty and each applied batch
+            # commits one version, so version b IS the state before batch
+            # b, still addressable even after this sink committed b).
+            # Pruned to the batch's partitions: a witness for a batch key
+            # can only live where that key hashes.
+            prior = self.read_parts(spark, touched, version=batch_id).select(
+                "key", F.col("min_id").alias("_w")
+            )
+            witness = batch_min.join(prior, "key", "left").select(
+                "key", F.coalesce("_w", "_bmin").alias("_w")
+            )
+            edges = (
+                kr.join(witness, "key")
+                .filter(F.col(self.id_col) != F.col("_w"))
+                .select(
+                    F.least(F.col(self.id_col), F.col("_w")).alias("id_a"),
+                    F.greatest(F.col(self.id_col), F.col("_w")).alias("id_b"),
+                )
+                .distinct()
+                # the cluster fold runs several actions over its input
+                # (CC rounds, remap joins, snapshot write); checkpoint the
+                # small edge set so none of them re-derives it
+                .localCheckpoint(eager=True)
+            )
+            cs.write_batch(edges, batch_id)
+        if self.seen(batch_id):
+            return  # flags/state already committed; only clusters lagged
+
+        # the membership probe reads only the batch's own partitions
         seen_before = self.read_parts(spark, touched).select(
             "key"
         ).withColumn("_prior", F.lit(True))
@@ -474,6 +348,8 @@ class KeyStateNearDupSink(PartitionedSnapshotStore):
                 ).alias("is_near_dup")
             )
         )
+        # docs that derive no keys (e.g. too few tokens to shingle) are
+        # never dups
         out = (
             batch.select(self.id_col)
             .join(flagged, self.id_col, "left")
@@ -489,10 +365,28 @@ class KeyStateNearDupSink(PartitionedSnapshotStore):
             .partitionBy("_bid")
             .parquet(self.flags_dir)
         )
-        # state delta = the batch's min id per key, min-merged on read
+        # state delta = the batch's min id per key, O(|batch|) rows; the
+        # store's merge-on-read min-folds it against history — the full
+        # state table is never rewritten
         self.commit_batch(
             batch_min.select("key", F.col("_bmin").alias("min_id")), batch_id
         )
+
+
+def minhash_band_keys(id_col: str, text_col: str, shingle_n: int = 3,
+                      k: int = 16, bands: int = 8):
+    """Key derivation for the MinHash-LSH family: one row per (doc, band),
+    key = 'band_idx_band_key' — identical signature and band algebra to
+    the batch ``textdedup.minhash_near_dups`` candidate stage. The key is
+    injective: ``band_idx`` is digits only, so the first '_' ends it."""
+
+    def f(batch: DataFrame) -> DataFrame:
+        sigs = minhash_signatures(batch, id_col, text_col, shingle_n, k)
+        return lsh_band_rows(sigs, id_col, bands, k // bands).select(
+            id_col, F.concat_ws("_", "band_idx", "band_key").alias("key")
+        )
+
+    return f
 
 
 def simhash_band_keys(id_col: str, text_col: str):

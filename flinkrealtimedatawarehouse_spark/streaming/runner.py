@@ -168,29 +168,6 @@ def parquet_stream(
     )
 
 
-class _stream_shuffle_partitions:
-    """Scope a lower shuffle-partition count to one replay run.
-
-    A stateful streaming query pays a state-store commit per shuffle
-    partition per micro-batch; at replay-harness scale (a few thousand
-    rows over ~6 micro-batches) 32 partitions is pure overhead — the
-    per-query state partition count is fixed from the FIRST batch of a
-    checkpoint, and our checkpoints are fresh per run, so narrowing the
-    setting here is safe and local. On a real cluster you would size this
-    to executor count × cores instead; the operators themselves don't care.
-    """
-
-    def __init__(self, spark: SparkSession, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-
-
 class scoped_conf:
     """Scope session-conf overrides to one replay run: set before the
     stream starts (Spark consults streaming confs at start), restored to
@@ -225,11 +202,17 @@ def run_to_memory(
     conf_overrides: dict | None = None,
 ) -> DataFrame:
     """Run a streaming DF to completion into a memory sink; return the
-    sink table as a batch DataFrame. Checkpointing on (T9)."""
+    sink table as a batch DataFrame. Checkpointing on (T9).
+
+    ``shuffle_partitions`` is scoped to this run: a stateful query pays
+    one state-store commit per shuffle partition per micro-batch, and the
+    count is fixed by a fresh checkpoint's first batch, so replay-harness
+    runs stay narrow. ``conf_overrides`` win over it."""
     name = f"sink_{tag}_{os.getpid()}_{next(_counter)}"
-    with _stream_shuffle_partitions(sdf.sparkSession, shuffle_partitions), scoped_conf(
-        sdf.sparkSession, conf_overrides
-    ):
+    with scoped_conf(sdf.sparkSession, {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        **(conf_overrides or {}),
+    }):
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -290,7 +273,8 @@ def run_foreach_batch(
 ) -> None:
     """Run a streaming DF to completion through a foreachBatch writer
     (the K2/K3/K4 sink shapes). Checkpointing on."""
-    with _stream_shuffle_partitions(sdf.sparkSession, shuffle_partitions):
+    with scoped_conf(sdf.sparkSession,
+                     {"spark.sql.shuffle.partitions": str(shuffle_partitions)}):
         q = (
             sdf.writeStream.foreachBatch(batch_fn)
             .option("checkpointLocation", scratch_dir(f"ckpt_{tag}"))

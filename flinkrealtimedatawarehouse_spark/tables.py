@@ -30,14 +30,6 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Dimension tables that are safe to ALWAYS broadcast in star joins — only
-# the genuinely fixed-size ones (region=5, nation=25 at every scale
-# factor). customer/part/supplier scale linearly with the data (billions of
-# rows at 100 TB) and must go through AQE's size-based decision instead —
-# the Spark replacement for the reference's per-row async Phoenix lookups
-# (SURVEY.md §2.4 J3: rt/app/function/AbstractDimAsyncFunction.java:58-91).
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
 
 def _normalize_event_time(df: DataFrame) -> DataFrame:
     """Normalize every TIMESTAMP_NTZ column to plain TIMESTAMP (LTZ).

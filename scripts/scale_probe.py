@@ -537,8 +537,9 @@ def main() -> int:
 
     for m in (multiples if want("sinks") else []):
         d = amplify(docs, "doc_id", m).select("doc_id", "text")
-        nd = neardup.BandStateNearDupSink(
-            srunner.scratch_dir(f"probe_nd_x{m}"), "doc_id", "text"
+        nd = neardup.KeyStateNearDupSink(
+            srunner.scratch_dir(f"probe_nd_x{m}"), "doc_id",
+            neardup.minhash_band_keys("doc_id", "text"),
         )
         nd.init(spark)
         t_nd = drive_batches(nd.write_batch, d, "doc_id")
@@ -581,8 +582,9 @@ def main() -> int:
 
     for m in (multiples if want("incrsnap") else []):
         d = amplify(docs, "doc_id", m).select("doc_id", "text")
-        nd = neardup.BandStateNearDupSink(
-            srunner.scratch_dir(f"probe_is_x{m}"), "doc_id", "text"
+        nd = neardup.KeyStateNearDupSink(
+            srunner.scratch_dir(f"probe_is_x{m}"), "doc_id",
+            neardup.minhash_band_keys("doc_id", "text"),
         )
         nd.init(spark)
         recs = []
@@ -658,9 +660,9 @@ def main() -> int:
         n_b = 64
         d = amplify(docs, "doc_id", m).select("doc_id", "text")
         cl = ClusterUpkeepSink(srunner.scratch_dir(f"probe_ds_cl_x{m}"), "doc_id")
-        nd = neardup.BandStateNearDupSink(
-            srunner.scratch_dir(f"probe_ds_nd_x{m}"), "doc_id", "text",
-            cluster_sink=cl,
+        nd = neardup.KeyStateNearDupSink(
+            srunner.scratch_dir(f"probe_ds_nd_x{m}"), "doc_id",
+            neardup.minhash_band_keys("doc_id", "text"), cluster_sink=cl,
         )
         nd.init(spark)
         recs = []

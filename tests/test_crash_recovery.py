@@ -62,11 +62,15 @@ B2 = [(5, BASE), (6, "yet more unique content that shares nothing with others")]
 
 
 def _run_band(spark, base_dir, crash_batch=None):
-    from flinkrealtimedatawarehouse_spark.streaming.neardup import BandStateNearDupSink
+    from flinkrealtimedatawarehouse_spark.streaming.neardup import (
+        KeyStateNearDupSink,
+        minhash_band_keys,
+    )
 
     def fresh():
-        return BandStateNearDupSink(base_dir, "doc_id", "text",
-                                    shingle_n=3, k=16, bands=8)
+        return KeyStateNearDupSink(
+            base_dir, "doc_id",
+            minhash_band_keys("doc_id", "text", shingle_n=3, k=16, bands=8))
 
     sink = fresh()
     sink.init(spark)
@@ -78,7 +82,7 @@ def _run_band(spark, base_dir, crash_batch=None):
             sink = fresh()  # restart: recover marker, redeliver batch
         sink.write_batch(_docs(spark, rows), bid)
     flags = {r.doc_id: r.is_near_dup for r in sink.flags(spark).collect()}
-    state = sorted((r.band_key, r.min_id) for r in sink.state(spark).collect())
+    state = sorted((r.key, r.min_id) for r in sink.state(spark).collect())
     return flags, state
 
 
@@ -536,9 +540,8 @@ def _run_chain(spark, in_dir, work_dir, crash_batch=None):
         chain = state.bounce_stats_stream(
             sdf, gap_s=10, delay="1 second", duration="1 minute"
         )
-        with runner._stream_shuffle_partitions(spark, 8), runner.scoped_conf(
-            spark, state.CHAIN_STREAM_CONFS
-        ):
+        with runner.scoped_conf(spark, {"spark.sql.shuffle.partitions": "8",
+                                        **state.CHAIN_STREAM_CONFS}):
             q = (
                 chain.writeStream.foreachBatch(batch_fn)
                 .option("checkpointLocation", ckpt)
@@ -774,13 +777,16 @@ def _run_band_with_clusters(spark, base_dir, crash_batch=None,
     byte-identical on replay even though the live state moved on."""
     from flinkrealtimedatawarehouse_spark.streaming.clusters import ClusterUpkeepSink
     from flinkrealtimedatawarehouse_spark.streaming.neardup import (
-        BandStateNearDupSink,
+        KeyStateNearDupSink,
+        minhash_band_keys,
     )
 
     def fresh():
         cl = ClusterUpkeepSink(os.path.join(base_dir, "cl"), "doc_id")
-        s = BandStateNearDupSink(os.path.join(base_dir, "bs"), "doc_id", "text",
-                                 shingle_n=3, k=16, bands=8, cluster_sink=cl)
+        s = KeyStateNearDupSink(
+            os.path.join(base_dir, "bs"), "doc_id",
+            minhash_band_keys("doc_id", "text", shingle_n=3, k=16, bands=8),
+            cluster_sink=cl)
         s.init(spark)
         return s
 

@@ -33,3 +33,56 @@ def test_entry_runs_on_smoke_sf(spark):
     df = m.entry(spark)
     assert df.count() > 0
     assert [f.name for f in df.schema.fields] == ["r_name", "n_name", "revenue", "order_ct"]
+
+
+def test_every_benchmark_query_and_oracle_has_a_caller():
+    """A top-level ``q_*`` function or ``SQL_*`` constant in
+    ``benchqueries/*.py`` must be referenced somewhere besides its own
+    definition — by its module, or imported / attribute-accessed from
+    the package, tests, scripts or benchmarks. Unreferenced wrappers are
+    dead code the registry no longer reaches."""
+    import ast
+    import glob
+    from pathlib import Path
+
+    pkg = "flinkrealtimedatawarehouse_spark.benchqueries"
+    bq_dir = os.path.join(REPO, *pkg.split("."))
+    mods = {
+        os.path.basename(p)[:-3]: p
+        for p in glob.glob(os.path.join(bq_dir, "*.py"))
+        if not p.endswith("__init__.py")
+    }
+    defined = set()
+    for mod, path in mods.items():
+        for node in ast.parse(Path(path).read_text()).body:
+            if isinstance(node, ast.FunctionDef):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = getattr(node, "targets", [getattr(node, "target", None)])
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                names = []
+            defined |= {(mod, n) for n in names if n.startswith(("q_", "SQL_"))}
+
+    sources = [os.path.join(REPO, f) for f in ("bench.py", "__spark_entry__.py")]
+    for d in ("flinkrealtimedatawarehouse_spark", "tests", "scripts", "perfbench"):
+        sources += glob.glob(os.path.join(REPO, d, "**", "*.py"), recursive=True)
+    used = set()
+    for path in sources:
+        tree = ast.parse(Path(path).read_text())
+        here = (os.path.basename(path)[:-3]
+                if os.path.dirname(path) == bq_dir else None)
+        aliases = {}  # local name -> benchqueries module it stands for
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == pkg:
+                aliases.update({a.asname or a.name: a.name for a in node.names})
+            elif isinstance(node, ast.ImportFrom) and (node.module or "").startswith(pkg + "."):
+                mod = node.module.rsplit(".", 1)[1]
+                used |= {(mod, a.name) for a in node.names}
+        for node in ast.walk(tree):
+            if here and isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                used.add((here, node.id))
+            elif (isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
+                  and node.value.id in aliases):
+                used.add((aliases[node.value.id], node.attr))
+    assert sorted(defined - used) == []

@@ -138,6 +138,32 @@ def test_snapshot_merge_latest_version_wins(spark, tmp_path):
     assert final == {1: (12.0, 2), 2: (20.0, 0), 3: (30.0, 1)}
 
 
+def test_q_s2_commits_each_batch_through_its_sink(spark, monkeypatch):
+    """q_s2's per-batch CDC MERGE must commit through its
+    SnapshotMergeSink (marker, fence, replay guard): a restarted sink on
+    the same dir resumes after the last streamed batch, not at the base
+    snapshot."""
+    import os
+
+    from flinkrealtimedatawarehouse_spark import tables
+    from flinkrealtimedatawarehouse_spark.benchqueries import streamq
+
+    smoke_sf = os.path.join(
+        os.path.dirname(tables.DEFAULT_SF_DIR.rstrip("/")), "sf0.001")
+    dirs = {}
+    scratch_dir = runner.scratch_dir
+
+    def recording_scratch_dir(tag, fresh=True):
+        dirs[tag] = scratch_dir(tag, fresh)
+        return dirs[tag]
+
+    monkeypatch.setattr(runner, "scratch_dir", recording_scratch_dir)
+    assert streamq.q_s2(spark, smoke_sf).count() > 0
+    resumed = sinks.SnapshotMergeSink(dirs["out_s2"], "c_custkey", "v")
+    # v0 = base snapshot, then one version per changelog batch (ids 0, 1)
+    assert (resumed.version, resumed.last_bid) == (2, 1)
+
+
 def test_monotonic_watermark_zero_delay(spark):
     """T2: orders/payments are assumed ascending in the reference
     (forMonotonousTimestamps, OrderWideApp.java:64,76) — the Spark form is
@@ -543,8 +569,9 @@ def test_band_state_neardup_split_invariant_and_matches_batch_lsh(spark, tmp_pat
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     def run(splits, tag):
-        sink = neardup.BandStateNearDupSink(
-            str(tmp_path / tag), "doc_id", "text", shingle_n=3, k=16, bands=8
+        sink = neardup.KeyStateNearDupSink(
+            str(tmp_path / tag), "doc_id",
+            neardup.minhash_band_keys("doc_id", "text", shingle_n=3, k=16, bands=8),
         )
         sink.init(spark)
         for i, ids in enumerate(splits):
@@ -577,8 +604,9 @@ def test_band_state_neardup_marks_late_smaller_id(spark, tmp_path):
     from flinkrealtimedatawarehouse_spark.streaming import neardup
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
-    sink = neardup.BandStateNearDupSink(
-        str(tmp_path / "nd_late"), "doc_id", "text", shingle_n=3, k=16, bands=8
+    sink = neardup.KeyStateNearDupSink(
+        str(tmp_path / "nd_late"), "doc_id",
+        neardup.minhash_band_keys("doc_id", "text", shingle_n=3, k=16, bands=8),
     )
     sink.init(spark)
     sink.write_batch(
@@ -1926,7 +1954,8 @@ def test_band_sink_folds_preserve_flags_and_prebatch_witness_reads(spark, tmp_pa
     manifest rewrites."""
     from flinkrealtimedatawarehouse_spark.streaming.clusters import ClusterUpkeepSink
     from flinkrealtimedatawarehouse_spark.streaming.neardup import (
-        BandStateNearDupSink,
+        KeyStateNearDupSink,
+        minhash_band_keys,
     )
 
     base = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -1934,9 +1963,10 @@ def test_band_sink_folds_preserve_flags_and_prebatch_witness_reads(spark, tmp_pa
 
     def run(tag, **kw):
         cl = ClusterUpkeepSink(str(tmp_path / f"cl{tag}"), "doc_id", **kw)
-        sink = BandStateNearDupSink(
-            str(tmp_path / f"bs{tag}"), "doc_id", "text",
-            shingle_n=3, k=16, bands=8, cluster_sink=cl, **kw)
+        sink = KeyStateNearDupSink(
+            str(tmp_path / f"bs{tag}"), "doc_id",
+            minhash_band_keys("doc_id", "text", shingle_n=3, k=16, bands=8),
+            cluster_sink=cl, **kw)
         sink.init(spark)
         for bid in range(12):
             batch = spark.createDataFrame(
@@ -1946,7 +1976,7 @@ def test_band_sink_folds_preserve_flags_and_prebatch_witness_reads(spark, tmp_pa
                        for r in sink.flags(spark).collect())
         labels = sorted((r.doc_id, r.cluster)
                         for r in cl.clusters(spark).collect())
-        state = sorted((r.band_key, r.min_id)
+        state = sorted((r.key, r.min_id)
                        for r in sink.state(spark).collect())
         return sink, flags, labels, state
 
@@ -1977,7 +2007,8 @@ def test_band_sink_composes_with_cluster_upkeep(spark, tmp_path):
     from flinkrealtimedatawarehouse_spark.datapipeline import textdedup
     from flinkrealtimedatawarehouse_spark.streaming.clusters import ClusterUpkeepSink
     from flinkrealtimedatawarehouse_spark.streaming.neardup import (
-        BandStateNearDupSink,
+        KeyStateNearDupSink,
+        minhash_band_keys,
     )
 
     random.seed(31)
@@ -2002,9 +2033,10 @@ def test_band_sink_composes_with_cluster_upkeep(spark, tmp_path):
 
     for n_batches in (1, 3):
         cl = ClusterUpkeepSink(str(tmp_path / f"cl{n_batches}"), "doc_id")
-        sink = BandStateNearDupSink(
-            str(tmp_path / f"bs{n_batches}"), "doc_id", "text",
-            shingle_n=3, k=16, bands=8, cluster_sink=cl,
+        sink = KeyStateNearDupSink(
+            str(tmp_path / f"bs{n_batches}"), "doc_id",
+            minhash_band_keys("doc_id", "text", shingle_n=3, k=16, bands=8),
+            cluster_sink=cl,
         )
         sink.init(spark)
         per = len(rows) // n_batches
